@@ -1,9 +1,51 @@
 """Deduplication operators for document-scale corpora: exact,
-MinHash+LSH, SimHash, and n-gram Jaccard (north-star extension,
-SURVEY.md §7.4).
+MinHash+LSH, SimHash, n-gram Jaccard and winnowing (north-star
+extension, SURVEY.md §7.4).
 
 All hashing is deterministic (xxhash64 / md5 built-ins with fixed
 permutation constants) so results are reproducible run-to-run.
+
+Shared stages
+-------------
+Every near-dup operator is one path through the stages below; each
+stage exists once, as a private helper. The engine-specific fast
+paths and their cross-engine md5 audit twins differ only in the
+hash they pass in.
+
+- ``_normalized`` — id-spread rows with normalized text. Used by
+  ``_shingle_base`` and ``winnow_share_pairs``.
+- ``_shingle_base`` — normalize, then shingle, as two steps so the
+  regex runs once per row. Builds the gram sets of
+  ``minhash_signatures``, ``minhash_near_duplicates``,
+  ``md5_gram_sets`` (string grams) and the n-gram family
+  (``ngram_jaccard_pairs``, ``jaccard_prefix_filter_pairs``,
+  ``similarity_join``). Each caller picks its own pin.
+- ``_gram_df`` — the per-block gram document-frequency aggregate.
+  Feeds the candidate generators, ``choose_similarity_plan`` and
+  ``_gram_bitmaps``.
+- ``_signatures(perm)`` — per-row MinHash signatures. The fast path
+  passes ``_affine_perm`` (xxhash64 basis), the md5 twin
+  ``_md5_perm`` (``md5_minhash_signatures``).
+- ``_lsh_candidates(bucket_hash)`` — band the signatures and
+  self-join the buckets: ``minhash_near_duplicates`` hashes buckets
+  with xxhash64, ``minhash_near_duplicates_md5`` with md5.
+- ``_capped_candidates`` / ``_prefix_filter_candidates`` — the
+  n-gram candidate generators. ``_rare_gram_rows`` and
+  ``_shared_gram_pairs`` (the inverted-index self-join) also serve
+  the uncapped ``ngram_jaccard_pairs`` and ``winnow_share_pairs``.
+- ``_gram_bitmaps`` — vocabulary statistic, then per-document gram
+  bitmaps, or ``None`` above ``_BITMAP_VOCAB_CAP``. Used by
+  ``minhash_near_duplicates``, the n-gram family and
+  ``plans.doc_clusters.md5_gram_bits``.
+- ``_verify_jaccard_candidates`` — the one exact-Jaccard verifier,
+  over bitmaps when given, over gram arrays otherwise. Used by both
+  MinHash operators and the n-gram family.
+- ``_simhash(n_bits)`` — bit votes → signed recombine:
+  ``simhash64_table`` (64-bit xxhash64 tokens) and
+  ``simhash_near_duplicates_md5`` (32-bit md5 tokens).
+- ``_chunk_pairs(bounds)`` — chunk banding self-join plus hamming
+  verify: ``hash64_near_dup_pairs`` (pigeonhole layout from
+  ``max_hamming``) and ``simhash_near_duplicates_md5`` (4 × 8 bits).
 
 Scale notes
 -----------
@@ -16,25 +58,26 @@ Scale notes
   only within buckets. Tune (num_perm, bands) for the target
   similarity threshold; buckets with pathological collision counts
   are handled by AQE skew-splitting of the self-join.
-- SimHash is computed with pure JVM expressions (64 bitplane
-  aggregations per doc). Near-dup candidates come from 16-bit
-  chunk banding (pigeonhole: hamming ≤ 3 ⇒ some chunk equal).
+- SimHash is computed with pure JVM expressions (one vote per
+  bitplane per token). Near-dup candidates come from chunk banding
+  (pigeonhole: hamming ≤ k ⇒ one of k + 1 chunks equal).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from big_data_processing_spark import partitioning
 from big_data_processing_spark.functions.text import (
     char_ngram_hashes_of_norm,
     char_ngrams_of_norm,
     md5_fingerprint,
     normalize_text,
     tokens,
+    winnow_of_hashes,
 )
-
-from big_data_processing_spark.partitioning import spread as _spread
 
 # Mersenne prime 2^31 - 1: modular universal-hash family for MinHash.
 _MERSENNE = (1 << 31) - 1
@@ -42,6 +85,13 @@ _MERSENNE = (1 << 31) - 1
 # sequence derived from the permutation index.
 _A = [2 * i + 1 for i in range(1, 129)]  # odd multipliers
 _B = [(i * i * 7919 + 13) % _MERSENNE for i in range(1, 129)]
+
+#: Block-vocabulary ceiling for the bitmap exact verifier: with
+#: ``vocab`` distinct grams in a block, each document's gram set is
+#: ``ceil(vocab/64)`` longs; 4096 → ≤64 words ANDed+popcounted per
+#: candidate pair, still well under the hash-set cost of
+#: ``array_intersect`` on typical (hundreds-long) gram arrays.
+_BITMAP_VOCAB_CAP = 4096
 
 
 def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
@@ -96,545 +146,81 @@ def dedup_by_fingerprint(
     )
 
 
-def minhash_signatures(
+# ---------------------------------------------------------------------------
+# Shared stages: shingles and gram statistics
+# ---------------------------------------------------------------------------
+
+
+def _normalized(
+    df: DataFrame, text_col: str, id_col: str, block_cols=()
+) -> DataFrame:
+    """(id, *block_cols, nrm): rows spread by id across the session's
+    cores, text normalized once per row."""
+    keep = [id_col, *block_cols]
+    return partitioning.spread(df.select(*keep, text_col), id_col).select(
+        *keep, normalize_text(F.col(text_col)).alias("nrm")
+    )
+
+
+def _shingle_base(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    num_perm: int = 32,
-    shingle_n: int = 5,
+    n: int,
+    block_cols=(),
+    shingle=char_ngram_hashes_of_norm,
+    drop_empty: bool = False,
 ) -> DataFrame:
-    """MinHash signatures as (id, m0..m{k-1}) — one column per
-    permutation.
+    """(id, *block_cols, grams): each document's distinct character
+    n-gram set — 64-bit hashes by default, strings with
+    ``shingle=char_ngrams_of_norm``. Shingling reads the
+    materialized ``nrm`` column: passing the normalize expression
+    into the shingler would re-run the regex once per gram.
 
-    Spark-idiomatic shape: explode shingles → project the
-    ``num_perm`` permuted hashes as plain columns → ONE
-    hash-aggregate of trivial ``min(hN)`` columns. Partial
-    (map-side) aggregation means the shuffle carries one 32-long
-    row per doc per partition. Hoisting the permutation arithmetic
-    out of the aggregate expressions into the projection below it
-    measured cold 10.1 s → 4.1 s and steady 2-7 s → 0.95 s at sf0.1
-    (the generated aggregate-update code shrinks to comparisons, so
-    Janino/C2 compile far less and the hot loop tiers up fully);
-    an array-expression formulation with 32 nested transforms
-    measured ~10× slower still — codegen falls over on huge
-    expression trees. Docs with no shingles drop out (they have no
-    near-dup semantics)."""
-    hashed = (
-        _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
-        .select(
-            F.col(id_col), normalize_text(F.col(text_col)).alias("nrm")
-        )
-        .select(
-            F.col(id_col),
-            F.explode(
-                char_ngram_hashes_of_norm(F.col("nrm"), shingle_n)
-            ).alias("g"),
-        )
-        .select(id_col, F.pmod(F.col("g"), F.lit(_MERSENNE)).alias("h"))
-        .select(
-            id_col,
-            *[
-                ((F.col("h") * _A[i] + _B[i]) % _MERSENNE).alias(f"h{i}")
-                for i in range(num_perm)
-            ],
-        )
-    )
-    return hashed.groupBy(id_col).agg(
-        *[F.min(f"h{i}").alias(f"m{i}") for i in range(num_perm)]
+    ``drop_empty`` drops documents with no shingles through
+    ``length(nrm) >= n`` BEFORE the shingling projection, not a
+    ``size(grams) > 0`` filter after it. The two are equivalent (the
+    shingle count is ``max(length - (n-1), 0)``), but Catalyst pushes
+    a post-hoc size() filter below both projections and inlines
+    ``normalize_text`` into the per-gram lambda: one regex per
+    shingle instead of per row (measured 15.7 s vs 0.8 s at sf0.1).
+    The length predicate is cheap, but it too is pushed toward the
+    scan: it re-runs ``normalize_text`` on whatever unpinned plan lies
+    below (see :func:`minhash_near_duplicates`)."""
+    nrm = _normalized(df, text_col, id_col, block_cols)
+    if drop_empty:
+        nrm = nrm.filter(F.length("nrm") >= n)
+    return nrm.select(
+        id_col, *block_cols, shingle(F.col("nrm"), n).alias("grams")
     )
 
 
-def minhash_near_duplicates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 5,
-    threshold: float = 0.6,
-    persist: bool = False,
-    pin_result: bool = True,
-    grams: DataFrame | None = None,
-    bits: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs with exact-Jaccard
-    verification. Returns (id_a, id_b, jaccard), id_a < id_b.
-
-    ``grams`` / ``bits`` accept pre-built, ideally session-memoized
-    frames on the STRING gram basis (:func:`md5_gram_sets` /
-    the gram-bitmap frame from ``plans.doc_clusters.md5_gram_bits``)
-    — the same contract as the md5 twin. The xxhash64 signature
-    basis is derived from them per row (``xxhash64`` over a distinct
-    string-gram set IS the distinct hash set this path shingles
-    itself; ``array_min`` is duplicate-insensitive, so a 64-bit
-    collision cannot change a signature), and candidate pairs verify
-    against the bitmaps with jaccard values identical to the hashed
-    arrays — both count the same distinct-gram sets. With both
-    frames provided this path never rescans the corpus at all: one
-    per-row projection over the pinned gram table, the band
-    self-join, and a popcount verify.
-
-    ``pin_result`` (default on) ends the pipeline with a lazy
-    ``localCheckpoint`` of the verified pairs — the same hazard fix
-    as :func:`_verify_jaccard_candidates`: callers sort the pairs,
-    and range partitioning SAMPLES its child, re-executing the
-    whole band-join + verify pipeline a second time. Pass ``False``
-    when the caller immediately re-materializes the pairs itself.
-
-    Pipeline (r12 restructure, guide §2.4/§1.2): the shingle frame
-    is built ONCE and eagerly pinned (it feeds the signatures, the
-    vocabulary statistic, and the exact verification — previously
-    each reference re-ran the normalize+shingle pipeline, and the
-    two verify-side broadcast jobs re-ran it CONCURRENTLY before a
-    lazy pin could land); signatures are computed PER ROW over the
-    pinned gram arrays (``array_min(transform(...))`` — min over a
-    distinct array equals min over the exploded group, zero
-    shuffles) instead of explode + 32-column aggregate; the banded
-    frame is pinned so the bucket self-join's two sides read one
-    tiny materialized table instead of re-running the signature
-    build twice. Only ids and band hashes ever shuffle.
-
-    Exact verification dispatches like the ngram family
-    (:func:`_verify_jaccard_candidates`): when the corpus-wide
-    distinct-gram vocabulary fits ``_BITMAP_VOCAB_CAP``, candidates
-    verify over per-document gram BITMAPS (popcount of AND —
-    identical jaccard values, no per-pair hash-set build). The r11
-    note about an un-memoized bitmap dispatch being 13× slower no
-    longer applies: the vocab scalar and the bitmap build now run
-    over the eagerly-pinned gram frame (one cheap pass each) instead
-    of re-running the whole shingle pipeline per reference. Measured
-    at sf0.1/local[32]: the array verify stage was 21-60 s executor
-    CPU for 158k candidates (pass-to-pass GC instability — the r11
-    driver's 9.0 s wall regression); the bitmap verify removes that
-    allocation entirely. Large-vocabulary corpora keep the array
-    path (a bitmap would be wider than the gram array itself).
-
-    ``persist=True`` is accepted for compatibility but subsumed: the
-    shingle frame is always materialized exactly once per call now.
-
-    Scaling note (the 30× sf0.1→sf1 bench slope, SCALE.md): the
-    superlinear number is OUTPUT-driven, not plan-driven — the sf1
-    corpus contains ~250k true near-dup pairs vs ~250 at sf0.1
-    (each doc's near-dup family grows with corpus size), so the
-    candidate set, the verification joins, and the result itself
-    grow ~1000× while the input grows 10×. The pairs are pinned by
-    the hash-green md5 twin (``minhash_near_duplicates_md5``;
-    sf1 gate: 249,490 twin pairs value-checked, fast path re-finds
-    99.77% — ``minhash_fastpath_audit``). On a corpus whose dup
-    rate is constant in corpus size, this path is linear in input
-    plus output."""
-    from big_data_processing_spark.partitioning import pin_now
-
-    rows = num_perm // bands
-    if grams is not None:
-        # memoized string-gram basis: hash per row, never rescan.
-        # Pinned NOW: projection collapse would otherwise inline this
-        # array into each of the num_perm signature transforms below
-        # — xxhash64 + array_distinct re-evaluated 32× per row
-        # (measured: 21.7 s + 16.7 s cumulative CPU for the two band
-        # sides at sf0.1; pinned, the hash runs once per gram)
-        shingled = pin_now(grams.select(
-            F.col(id_col),
-            F.array_distinct(
-                F.transform(F.col("grams"), lambda g: F.xxhash64(g))
-            ).alias("grams"),
-        ))
-    else:
-        shingled = pin_now(
-            _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
-            .select(
-                F.col(id_col), normalize_text(F.col(text_col)).alias("nrm")
-            )
-            .select(
-                F.col(id_col),
-                char_ngram_hashes_of_norm(F.col("nrm"), shingle_n).alias(
-                    "grams"
-                ),
-            )
-            # referenced by the signature build, the vocab statistic
-            # and the verify joins — materialized NOW (pin_now): the
-            # verify-side broadcast jobs launch concurrently, so a
-            # purely lazy pin re-runs the pipeline once per reference
-        )
-
-    # per-row signatures: min over the distinct gram array equals
-    # min over the exploded (id, gram) group, with zero shuffles;
-    # docs with no shingles drop out exactly like the explode did
-    def _perm(i: int):
-        return lambda g: (
-            F.pmod(g, F.lit(_MERSENNE)) * _A[i] + _B[i]
-        ) % _MERSENNE
-
-    sig = shingled.filter(F.size("grams") > 0).select(
-        F.col(id_col),
-        *[
-            F.array_min(F.transform(F.col("grams"), _perm(i))).alias(
-                f"m{i}"
-            )
-            for i in range(num_perm)
-        ],
-    )
-
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                F.concat_ws(",", *[
-                    F.col(f"m{b * rows + r}").cast("string")
-                    for r in range(rows)
-                ])
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    # no pin: both self-join sides re-derive this from the PINNED
-    # gram table — a cheap projection, and the two runs overlap as
-    # concurrent jobs, whereas a pin here is one more serial action
-    banded = sig.select(
-        id_col, F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
-
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), on=["band", "bucket"])
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-    if bits is not None:
-        return _verify_jaccard_candidates_bitmap(
-            bits, cand, id_col, threshold, pin_result=pin_result
-        )
-
-    # exact verification — bitmaps when the corpus vocabulary fits
-    # (one vocab-sized pass over the PINNED gram frame), arrays
-    # otherwise; identical values either way
-    vocab_src = (
-        shingled.select(F.explode("grams").alias("g"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    vocab = vocab_src.count()
-    if 0 < vocab <= _BITMAP_VOCAB_CAP:
-        own_bits = _bitmap_doc_frame(
-            shingled, [], id_col, _block_gram_dicts(vocab_src, []),
-            (vocab + 63) // 64,
-        )
-        return _verify_jaccard_candidates_bitmap(
-            own_bits, cand, id_col, threshold, pin_result=pin_result
-        )
-
-    # keyless spread: the keyed form is planner-eliminated against
-    # the dropDuplicates exchange and the surviving exchange is then
-    # AQE-coalesced by BYTES — wrong width for the CPU-dense
-    # array-jaccard verification (see partitioning.spread_even)
-    from big_data_processing_spark.partitioning import spread_even
-
-    pairs = spread_even(cand).join(
-        shingled.select(
-            F.col(id_col).alias("id_a"), F.col("grams").alias("sh_a")
-        ),
-        on="id_a",
-    ).join(
-        shingled.select(
-            F.col(id_col).alias("id_b"), F.col("grams").alias("sh_b")
-        ),
-        on="id_b",
-    )
-    # |A ∪ B| = |A| + |B| - |A ∩ B| exactly: the shingle arrays are
-    # array_distinct products. The identity avoids materializing a
-    # union ARRAY per pair — array_union allocated ~|A|+|B| elements
-    # per candidate, and the resulting allocation/GC pressure made
-    # the verify stage wildly unstable at sf0.1 (passes of 2-20 s
-    # wall, 419 s CPU worst case for 158k candidates vs ~19 s for
-    # the size-identity form).
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-    out = (
-        pairs.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out.localCheckpoint(eager=False) if pin_result else out
-
-
-def simhash64_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit SimHash per document as (id, simhash long).
-
-    Bit-EXPLODED formulation: (token, bit) rows → ``sum(±1)`` votes
-    per (doc, bit) → signs recombined by a second tiny aggregate.
-    The 64×-row explode looks wasteful but wins decisively over a
-    64-vote-column single aggregate (measured 2× cold, 4× warm):
-    the expression tree is ~64× smaller (codegen compiles in ms, not
-    seconds) and both aggregations run map-side partial, so the
-    shuffle carries ≤ 64 small rows per doc per partition."""
-    token = F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("t")
-    hashed = (
-        _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
-        .select(F.col(id_col), token)
-        .select(id_col, F.xxhash64("t").alias("h"))
-    )
-    bits = hashed.select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bit"),
-        "h",
-    ).select(
-        id_col,
-        "bit",
-        F.expr("(shiftright(h, bit) & 1) * 2 - 1").alias("v"),
-    )
-    votes = bits.groupBy(id_col, "bit").agg(F.sum("v").alias("vs"))
-    bit_value = F.expr(
-        "CASE WHEN bit < 63 THEN shiftleft(1L, bit) "
-        "ELSE CAST(-9223372036854775808 AS BIGINT) END"
-    )
-    return votes.groupBy(id_col).agg(
-        F.sum(
-            F.when(F.col("vs") > 0, bit_value).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).alias("simhash")
-    )
-
-
-def hash64_near_dup_pairs(
-    frame: DataFrame,
-    id_col: str,
-    hash_col: str,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs over ANY 64-bit signature column (SimHash,
-    image dHash, audio fingerprint): the 64 bits are split into
-    ``max_hamming + 1`` contiguous chunks, so a pair within the
-    threshold has at least one chunk equal by pigeonhole — banding
-    is LOSSLESS at any threshold, not just the default 3 (r9
-    ADVICE: a fixed 4×16-bit split silently under-recalled for
-    max_hamming > 3). Candidates are verified with
-    ``bit_count(a XOR b) <= max_hamming``. Returns
-    (id_a, id_b, hamming) with id_a < id_b. The self-join shuffles
-    (id, hash, chunk key) rows only: (max_hamming + 1) × 20-ish
-    bytes per row at any corpus size — larger thresholds pay more
-    bands AND denser buckets, the honest LSH trade."""
-    if not 0 <= max_hamming <= 63:
-        raise ValueError(
-            f"max_hamming must be in 0..63, got {max_hamming} "
-            "(64-bit signatures cannot band beyond 63)"
-        )
-    n = max_hamming + 1
-    bounds = [64 * c // n for c in range(n + 1)]
-
-    def chunk_key(c: int):
-        lo, width = bounds[c], bounds[c + 1] - bounds[c]
-        if width >= 64:  # max_hamming=0: exact-equality join
-            return F.col(hash_col)
-        return F.shiftrightunsigned(hash_col, lo).bitwiseAND(
-            F.lit((1 << width) - 1)
-        )
-
-    chunks = F.array(*[
-        F.struct(
-            F.lit(c).alias("chunk"),
-            chunk_key(c).alias("key"),
-        )
-        for c in range(n)
-    ])
-    banded = frame.select(
-        id_col, hash_col, F.explode(chunks).alias("cc")
-    ).select(id_col, hash_col, "cc.chunk", "cc.key")
-
-    left = banded.select(
-        F.col(id_col).alias("id_a"), F.col(hash_col).alias("h_a"),
-        "chunk", "key",
-    )
-    right = banded.select(
-        F.col(id_col).alias("id_b"), F.col(hash_col).alias("h_b"),
-        "chunk", "key",
-    )
-    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return (
-        left.join(right, on=["chunk", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup pairs: 16-bit-chunk banding for candidates
-    (hamming ≤ 3 ⇒ at least one of 4 chunks equal), verified with
-    ``bit_count(a XOR b) <= max_hamming``."""
-    # the chunk self-join references sim on both sides — materialize
-    # the (id, simhash) table once instead of re-voting 64 bitplanes
-    # twice; _spread first so the checkpoint doesn't freeze an
-    # AQE-coalesced 1-partition layout (see minhash_near_duplicates)
-    sim = _spread(
-        simhash64_table(df, text_col, id_col), id_col
-    ).localCheckpoint(eager=False)
-    return hash64_near_dup_pairs(sim, id_col, "simhash", max_hamming)
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    block_cols: list[str],
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = None,
-    allow_quadratic: bool = False,
-    pin_result: bool = True,
-) -> DataFrame:
-    """Exact n-gram-set Jaccard similarity for all pairs sharing a
-    blocking key (e.g. language + length bucket). Returns
-    (id_a, id_b, jaccard) with id_a < id_b.
-
-    Blocking keeps the self-join from being quadratic ACROSS blocks,
-    but within a block the inverted-index candidate work is
-    Σ_gram df(gram)² — quadratic in block size when grams are
-    ubiquitous (small-vocabulary corpora: measured 101× partials for
-    10× data on the sf1 scale replica). ``max_df`` is the scale
-    valve: candidate pairs are generated only from grams whose
-    block-local document frequency is ≤ max_df (bounding candidate
-    work at max_df × corpus grams — linear), then each candidate's
-    Jaccard is verified EXACTLY on the full gram arrays, so every
-    returned value is exact and every returned pair is real. The
-    approximation is one-sided recall: a pair sharing ONLY
-    ubiquitous grams is missed — precisely the pairs whose shared
-    evidence is least discriminative (the stop-word-dropping
-    standard from the similarity-join literature). ``max_df=None``
-    (default) is fully exact — and soft-guarded: past ~2 GiB of
-    input (≈ sf2 here; measured 77-133× slope per 10× data,
-    SCALE.md) a RuntimeWarning points at the ``max_df`` valve;
-    ``allow_quadratic=True`` acknowledges the cost
-    (partitioning.warn_if_quadratic)."""
-    if not threshold > 0.0:
-        # validated BEFORE the base frame: the eager checkpoint below
-        # materializes the whole normalize+shingle pipeline, so a
-        # bad-argument call must not pay a Spark job first (r11
-        # ADVICE)
-        raise ValueError(
-            "threshold must be > 0: the inverted-index formulation "
-            "never sees pairs with an empty intersection"
-        )
-    if max_df is None:
-        from big_data_processing_spark.partitioning import (
-            warn_if_quadratic,
-        )
-
-        warn_if_quadratic(
-            df, "ngram_jaccard_pairs(max_df=None)",
-            allow_quadratic=allow_quadratic,
-        )
-    from big_data_processing_spark.partitioning import pin_now
-
-    base = pin_now(
-        _spread(
-            df.select(
-                F.col(id_col), *[F.col(c) for c in block_cols],
-                F.col(text_col),
-            ),
-            id_col,
-        )
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in block_cols],
-            normalize_text(F.col(text_col)).alias("nrm"),
-        )
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in block_cols],
-            char_ngram_hashes_of_norm(F.col("nrm"), n).alias("grams"),
-        )
-        # referenced 4× below (sizes both sides, arrays both sides).
-        # Materialized NOW (pin_now): the verify joins broadcast both
-        # array sides, and those BroadcastExchange jobs launch
-        # CONCURRENTLY — with a purely lazy checkpoint each one
-        # recomputes the normalize+shingle pipeline before any blocks
-        # exist (measured at sf0.1: the gram subtree executed 3× in
-        # one build, two of them as simultaneous broadcast jobs).
-    )
-    # Inverted-index formulation: explode grams, self-join on
-    # (block, gram), COUNT shared grams per pair with map-side
-    # partial aggregation. The shuffle carries (id_a, id_b, count)
-    # partials — never the gram arrays themselves (the pair-array
-    # alternative shuffled both ~300-long arrays per candidate pair:
-    # GBs at sf0.1, measured ~2.5× slower). Zero-intersection pairs
-    # simply never appear, which is exact for any threshold > 0.
-    exploded = base.select(
+def _exploded(base: DataFrame, id_col: str, block_cols) -> DataFrame:
+    """(*block_cols, id, g): one row per (document, distinct gram)."""
+    return base.select(
         *block_cols, F.col(id_col), F.explode("grams").alias("g")
     )
-    if max_df is not None:
-        # one gram-df aggregate serves the candidate cap AND the
-        # verifier's bitmap dispatch — vocab-sized, cheap to hold
-        gram_df = (
-            exploded.groupBy(*block_cols, "g")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .localCheckpoint(eager=False)
-        )
-        cand = _capped_candidates(
-            exploded, block_cols, id_col, max_df, gram_df=gram_df
-        )
-        # exact verification — bitmaps on small-vocabulary corpora,
-        # full gram arrays otherwise; only the (small) candidate set
-        # pays the per-pair work either way
-        return _verify_jaccard_candidates(
-            base, cand, id_col, threshold, pin_result=pin_result,
-            gram_df=gram_df, block_cols=block_cols,
-        )
-    inter_counts = (
-        exploded.select(*block_cols, F.col(id_col).alias("id_a"), "g")
-        .join(
-            exploded.select(
-                *block_cols, F.col(id_col).alias("id_b"), "g"
-            ),
-            on=[*block_cols, "g"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sizes = base.select(F.col(id_col), F.size("grams").alias("sz"))
-    pairs = inter_counts.join(
-        sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")),
-        on="id_a",
-    ).join(
-        sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")),
-        on="id_b",
-    )
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    jac = F.when(
-        union > 0, F.col("inter").cast("double") / union
-    ).otherwise(F.lit(0.0))
+
+
+def _gram_df(base: DataFrame, block_cols) -> DataFrame:
+    """(*block_cols, g, __df): block-local document frequency of every
+    gram. Vocab-sized; callers that read it more than once pin it."""
     return (
-        pairs.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        base.select(*block_cols, F.explode("grams").alias("g"))
+        .groupBy(*block_cols, "g")
+        .agg(F.count(F.lit(1)).alias("__df"))
     )
 
 
-#: Block-vocabulary ceiling for the bitmap exact verifier: with
-#: ``vocab`` distinct grams in a block, each document's gram set is
-#: ``ceil(vocab/64)`` longs; 4096 → ≤64 words ANDed+popcounted per
-#: candidate pair, still well under the hash-set cost of
-#: ``array_intersect`` on typical (hundreds-long) gram arrays.
-_BITMAP_VOCAB_CAP = 4096
+# ---------------------------------------------------------------------------
+# Shared stages: exact Jaccard verification
+# ---------------------------------------------------------------------------
 
 
-def _max_block_vocab(gram_df: DataFrame, block_cols: list[str]) -> int:
+def _max_block_vocab(gram_df: DataFrame, block_cols) -> int:
     """Largest per-block distinct-gram count — the statistic the
-    bitmap-verify dispatch keys on. One vocab-sized aggregate job."""
+    bitmap-verify dispatch keys on. One vocab-sized aggregate job;
+    with no ``block_cols`` it is the corpus vocabulary."""
     row = (
         gram_df.groupBy(*block_cols)
         .agg(F.count(F.lit(1)).alias("__v"))
@@ -644,9 +230,7 @@ def _max_block_vocab(gram_df: DataFrame, block_cols: list[str]) -> int:
     return int(row["__mv"] or 0)
 
 
-def _block_gram_dicts(
-    gram_df: DataFrame, block_cols: list[str]
-) -> DataFrame:
+def _block_gram_dicts(gram_df: DataFrame, block_cols) -> DataFrame:
     """Flat per-block dense gram dictionary for the bitmap verifier:
     (*block_cols, g, __w word index, __b single-bit mask). Gram ids
     are assigned by ``row_number`` over the block's grams in gram
@@ -658,11 +242,7 @@ def _block_gram_dicts(
     element was measured at ~50 s CPU per build: Spark's
     ``element_at`` on a map is a LINEAR key scan, not a hash
     lookup."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(
-        *[F.col(c) for c in block_cols]
-    ).orderBy("g")
+    w = Window.partitionBy(*[F.col(c) for c in block_cols]).orderBy("g")
     return (
         gram_df.select(*block_cols, "g")
         .withColumn("__gid", F.row_number().over(w) - F.lit(1))
@@ -679,15 +259,14 @@ def _block_gram_dicts(
 
 def _bitmap_doc_frame(
     base: DataFrame,
-    block_cols: list[str],
+    block_cols,
     id_col: str,
     dicts: DataFrame,
     n_words: int,
-    gram_col: str = "grams",
 ) -> DataFrame:
     """(id, __sz, __bits) — each document's distinct-gram set as an
-    ``n_words``-long bitmap under its block's dictionary. One
-    broadcast hash join (gram → word/bit) over the exploded gram
+    ``n_words``-long bitmap under its block's dictionary, pinned.
+    One broadcast hash join (gram → word/bit) over the exploded gram
     table, then two aggregates — (id, word) → OR of bit masks, then
     id → word map — both collapsed by map-side partial aggregation
     inside the scan partition (``base`` is id-partitioned), so no
@@ -697,9 +276,9 @@ def _bitmap_doc_frame(
     word paid n_words conditionals per gram instance). A
     trailing-zero-padded global width is exact: AND of zero words
     adds zero popcount."""
-    ent = base.select(
-        *block_cols, F.col(id_col), F.explode(gram_col).alias("g")
-    ).join(F.broadcast(dicts), on=[*block_cols, "g"])
+    ent = _exploded(base, id_col, block_cols).join(
+        F.broadcast(dicts), on=[*block_cols, "g"]
+    )
     zero = F.lit(0).cast("long")
     perword = ent.groupBy(id_col, "__w").agg(
         F.bit_or("__b").alias("__word"),
@@ -727,77 +306,49 @@ def _bitmap_doc_frame(
         )
     )
     # referenced by BOTH sides of the verify join (two broadcast
-    # jobs launched concurrently): a purely lazy pin loses that
-    # race and both sides rebuild every bitmap (r11 ADVICE), and
-    # eager=True materializes through Dataset.checkpoint's internal
-    # rdd.count() — measured 8.0 s stage CPU where the normal
-    # execution of the same projection costs 1.3 s (see pin_now)
-    from big_data_processing_spark.partitioning import pin_now
-
-    return pin_now(out)
+    # jobs launched concurrently): a purely lazy pin loses that race
+    # and both sides rebuild every bitmap
+    return partitioning.pin_now(out)
 
 
-def _verify_jaccard_candidates_bitmap(
-    bits: DataFrame,
-    cand: DataFrame,
+def _gram_bitmaps(
+    base: DataFrame,
     id_col: str,
-    threshold: float,
-    pin_result: bool = True,
-) -> DataFrame:
-    """Exact Jaccard verification over per-document gram BITMAPS:
-    ``|A∩B|`` is the summed popcount of the pairwise AND — a few
-    dozen long ops per candidate instead of ``array_intersect``'s
-    per-pair hash-set build over hundreds of elements (measured at
-    sf0.1: the array verifier was the suite's single largest CPU
-    sink, 118 s executor CPU for 585k candidates in one build).
-    The values are IDENTICAL to the array path: both compute
-    ``|A∩B| / (|A|+|B|−|A∩B|)`` over the same distinct-gram-hash
-    sets, only the set representation differs."""
-    from big_data_processing_spark.partitioning import spread_even
+    gram_df: DataFrame | None = None,
+    block_cols=(),
+) -> DataFrame | None:
+    """Per-document gram bitmaps of ``base`` for the bitmap verifier,
+    or ``None`` when the largest block vocabulary is empty or exceeds
+    ``_BITMAP_VOCAB_CAP`` (a bitmap would then be ``vocab/8`` bytes
+    per document, wider than the gram array itself). ``gram_df`` is
+    the caller's pinned :func:`_gram_df`; without one, the global
+    gram table is built and pinned here (it is read twice: the
+    vocabulary statistic and the dictionary)."""
+    if gram_df is None:
+        gram_df = _gram_df(base, block_cols).localCheckpoint(eager=False)
+    vocab = _max_block_vocab(gram_df, block_cols)
+    if not 0 < vocab <= _BITMAP_VOCAB_CAP:
+        return None
+    return _bitmap_doc_frame(
+        base, block_cols, id_col, _block_gram_dicts(gram_df, block_cols),
+        (vocab + 63) // 64,
+    )
 
-    ba = bits.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__sz").alias("__sa"),
-        F.col("__bits").alias("__wa"),
-    )
-    bb = bits.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__sz").alias("__sb"),
-        F.col("__bits").alias("__wb"),
-    )
-    zero = F.lit(0).cast("long")
-    verified = (
-        spread_even(cand)
-        .join(ba, on="id_a")
-        .join(bb, on="id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.aggregate(
-                F.zip_with(
-                    "__wa",
-                    "__wb",
-                    lambda x, y: F.bit_count(x.bitwiseAND(y)).cast(
-                        "long"
-                    ),
-                ),
-                zero,
-                lambda a, b: a + b,
-            ).alias("inter"),
-            F.col("__sa").alias("sz_a"),
-            F.col("__sb").alias("sz_b"),
-        )
-    )
+
+def _jaccard_filter(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard ≥ threshold) from (id_a, id_b, inter,
+    sz_a, sz_b) over distinct-gram sets: |A ∪ B| = |A| + |B| − |A ∩ B|
+    exactly, so no union set is ever built. Rounded to 6 digits, the
+    cross-engine parity grid."""
     union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
     jac = F.when(
         union > 0, F.col("inter").cast("double") / union
     ).otherwise(F.lit(0.0))
-    out = (
-        verified.withColumn("jaccard", F.round(jac, 6))
+    return (
+        pairs.withColumn("jaccard", F.round(jac, 6))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out.localCheckpoint(eager=False) if pin_result else out
 
 
 def _verify_jaccard_candidates(
@@ -806,86 +357,672 @@ def _verify_jaccard_candidates(
     id_col: str,
     threshold: float,
     pin_result: bool = True,
-    gram_df: DataFrame | None = None,
-    block_cols: list[str] | None = None,
+    bits: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact Jaccard verification of a candidate pair set against the
-    full (id, grams) arrays in ``base``. Only the candidate set pays
-    the per-pair array shuffle; every returned value is exact.
+    """Exact Jaccard verification of a candidate pair set (id_a, id_b).
+    Only the candidate set pays per-pair work; every returned value
+    is exact.
 
-    Two measured plan hazards (r11 optimization, sf0.1 stage
-    metrics):
+    With ``bits`` (a :func:`_gram_bitmaps` frame over the same gram
+    sets) ``|A∩B|`` is the summed popcount of the pairwise AND — a
+    few dozen long ops per candidate instead of ``array_intersect``'s
+    per-pair hash-set build over the (id, grams) arrays of ``base``
+    (measured at sf0.1: the array verifier was the suite's largest
+    CPU sink, 118 s executor CPU for 585k candidates). Both compute
+    ``|A∩B| / (|A|+|B|−|A∩B|)`` over the same distinct-gram sets, so
+    the values are identical.
+
+    Two plan hazards this shape avoids:
 
     - the candidate frame enters this CPU-dense join tiny in BYTES
       (~20 B/row), so a keyed spread is planner-eliminated and the
       surviving distinct exchange AQE-coalesces to a handful of
-      tasks — 2/3 of the query's CPU on 4 of 32 cores. The keyless
-      :func:`spread_even` exchange cannot be eliminated or coalesced.
-    - callers sort the verified pairs (`orderBy` in the registered
-      queries): range partitioning SAMPLES its child, re-executing
-      this whole join+intersect pipeline a second time (measured as
-      two ~33 s-executor-time stages for one query). The lazy
-      localCheckpoint pins the (small) verified result so the range
-      sampler scans cached pair rows instead of recomputing the
-      candidate pipeline. Together: ngram_jaccard_prefix full pass
-      29.0 s -> 5.7 s at sf0.1, identical output.
+      tasks. The keyless :func:`partitioning.spread_even` exchange
+      cannot be eliminated or coalesced.
+    - callers sort the verified pairs: range partitioning SAMPLES its
+      child, re-executing the whole join+intersect pipeline a second
+      time. The tail lazy localCheckpoint (``pin_result``) lets the
+      sampler scan cached pair rows instead. Pass ``False`` when the
+      caller re-materializes the pairs itself (the cluster builder
+      pins its symmetrized edge list) — a second pin is overhead."""
+    if bits is None:
+        sides = base.select(
+            F.col(id_col), F.size("grams").alias("__n"),
+            F.col("grams").alias("__g"),
+        )
 
-    ``pin_result=False`` skips the tail checkpoint for callers that
-    immediately re-materialize the pairs themselves (the cluster
-    builder eagerly checkpoints its symmetrized edge list) — a
-    second pin there is pure overhead.
+        def inter(a, b):
+            return F.size(F.array_intersect(a, b))
+    else:
+        sides = bits.select(
+            F.col(id_col), F.col("__sz").alias("__n"),
+            F.col("__bits").alias("__g"),
+        )
 
-    When the caller passes the (pinned) per-block ``gram_df`` it
-    already computed plus ``block_cols``, the verifier measures the
-    largest block vocabulary and — when it fits
-    ``_BITMAP_VOCAB_CAP`` — verifies over per-document gram BITMAPS
-    instead of hash arrays (:func:`_verify_jaccard_candidates_bitmap`;
-    identical values, ~2 orders of magnitude less per-pair work on
-    small-vocabulary corpora). Large-vocabulary corpora keep the
-    array path: a bitmap would be ``vocab/8`` bytes per document
-    there, far wider than the gram array itself."""
-    from big_data_processing_spark.partitioning import spread_even
-
-    if gram_df is not None and block_cols:
-        vocab = _max_block_vocab(gram_df, block_cols)
-        if 0 < vocab <= _BITMAP_VOCAB_CAP:
-            bits = _bitmap_doc_frame(
-                base, block_cols, id_col,
-                _block_gram_dicts(gram_df, block_cols),
-                (vocab + 63) // 64,
-            )
-            return _verify_jaccard_candidates_bitmap(
-                bits, cand, id_col, threshold, pin_result=pin_result
+        def inter(a, b):
+            return F.aggregate(
+                F.zip_with(
+                    a, b,
+                    lambda x, y: F.bit_count(x.bitwiseAND(y)).cast("long"),
+                ),
+                F.lit(0).cast("long"),
+                lambda acc, c: acc + c,
             )
 
-    arrs_a = base.select(
-        F.col(id_col).alias("id_a"), F.col("grams").alias("__ga")
-    )
-    arrs_b = base.select(
-        F.col(id_col).alias("id_b"), F.col("grams").alias("__gb")
-    )
+    def side(s: str) -> DataFrame:
+        return sides.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col("__n").alias(f"sz_{s}"),
+            F.col("__g").alias(f"__g{s}"),
+        )
+
     verified = (
-        spread_even(cand)
-        .join(arrs_a, on="id_a")
-        .join(arrs_b, on="id_b")
+        partitioning.spread_even(cand)
+        .join(side("a"), on="id_a")
+        .join(side("b"), on="id_b")
         .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__ga", "__gb")).alias("inter"),
-            F.size("__ga").alias("sz_a"),
-            F.size("__gb").alias("sz_b"),
+            "id_a", "id_b", inter("__ga", "__gb").alias("inter"),
+            "sz_a", "sz_b",
         )
     )
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    jac = F.when(
-        union > 0, F.col("inter").cast("double") / union
-    ).otherwise(F.lit(0.0))
-    out = (
-        verified.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    out = _jaccard_filter(verified, threshold)
     return out.localCheckpoint(eager=False) if pin_result else out
+
+
+# ---------------------------------------------------------------------------
+# MinHash + LSH
+# ---------------------------------------------------------------------------
+
+# NB the lambda arity trap: ``F.transform`` passes (element, index)
+# to any two-argument callable, so ``lambda g, i=i: ...`` silently
+# receives the ARRAY INDEX as ``i`` — the permutation id is bound by
+# an outer closure, as in both permutations below.
+
+
+def _affine_perm(i: int):
+    """Permutation i of a 64-bit gram hash: ``(a·h + b) mod p`` over
+    the Mersenne prime p (engine-specific basis, the fast path)."""
+    return lambda g: (
+        F.pmod(g, F.lit(_MERSENNE)) * _A[i] + _B[i]
+    ) % _MERSENNE
+
+
+def _md5_perm(i: int):
+    """Permutation i of a string gram: ``md5('i:' || gram)`` — md5 is
+    identical in every engine, so signatures are SQL-reproducible."""
+    return lambda g: F.md5(F.concat_ws(":", F.lit(str(i)), g))
+
+
+def _signatures(
+    grams: DataFrame, id_col: str, num_perm: int, perm
+) -> DataFrame:
+    """(id, m0..m{k-1}) MinHash signatures, computed per row:
+    component i is ``array_min(transform(grams, perm(i)))`` — a
+    narrow map over each document's distinct-gram array with zero
+    shuffles. Min over a distinct array equals min over the exploded
+    (id, gram) group, so this is bit-identical to an explode +
+    per-permutation min aggregate without shuffling every gram
+    instance (measured at sf0.1 on the md5 basis: 1.0 s vs 9.9 s).
+    Documents with an empty gram array would get null components —
+    callers drop them first."""
+    return grams.select(
+        F.col(id_col),
+        *[
+            F.array_min(F.transform(F.col("grams"), perm(i))).alias(f"m{i}")
+            for i in range(num_perm)
+        ],
+    )
+
+
+def _lsh_candidates(
+    sig: DataFrame, id_col: str, bands: int, rows: int, bucket_hash
+) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, sharing at least one LSH
+    band: band b's bucket is ``bucket_hash`` of its ``rows``
+    signature components joined with ",". Only ids and bucket hashes
+    shuffle."""
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            bucket_hash(
+                F.concat_ws(",", *[
+                    F.col(f"m{b * rows + r}").cast("string")
+                    for r in range(rows)
+                ])
+            ).alias("bucket"),
+        )
+        for b in range(bands)
+    ]
+    # no pin: both self-join sides re-derive this from the caller's
+    # PINNED gram table — a cheap projection, and the two runs overlap
+    # as concurrent jobs, whereas a pin here is one more serial action
+    banded = sig.select(
+        id_col, F.explode(F.array(*band_cols)).alias("bb")
+    ).select(id_col, "bb.band", "bb.bucket")
+    return (
+        banded.alias("a")
+        .join(banded.alias("b"), on=["band", "bucket"])
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+        )
+        .filter(F.col("id_a") < F.col("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def minhash_signatures(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_perm: int = 32,
+    shingle_n: int = 5,
+) -> DataFrame:
+    """MinHash signatures as (id, m0..m{k-1}) — one column per
+    permutation, on the xxhash64 basis of
+    :func:`minhash_near_duplicates` (the same shingle base and
+    per-row builder). Docs with no shingles drop out (they have no
+    near-dup semantics)."""
+    return _signatures(
+        _shingle_base(df, text_col, id_col, shingle_n, drop_empty=True),
+        id_col, num_perm, _affine_perm,
+    )
+
+
+def minhash_near_duplicates(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_perm: int = 32,
+    bands: int = 8,
+    shingle_n: int = 5,
+    threshold: float = 0.6,
+    pin_result: bool = True,
+    grams: DataFrame | None = None,
+    bits: DataFrame | None = None,
+) -> DataFrame:
+    """MinHash+LSH near-duplicate pairs with exact-Jaccard
+    verification. Returns (id_a, id_b, jaccard), id_a < id_b.
+
+    Pipeline: shingle base (pinned now) → per-row signatures →
+    xxhash64 band buckets → bucket self-join → exact verify. The
+    shingle frame is materialized NOW (``pin_now``) because it feeds
+    the signatures, the vocabulary statistic and the verify joins,
+    whose broadcast jobs launch concurrently: a purely lazy pin
+    re-runs the normalize+shingle pipeline once per reference.
+
+    ``grams`` / ``bits`` accept pre-built, ideally session-memoized
+    frames on the STRING gram basis (:func:`md5_gram_sets` / the
+    gram-bitmap frame from ``plans.doc_clusters.md5_gram_bits``) —
+    the same contract as the md5 twin. The xxhash64 signature basis
+    is derived from them per row (``xxhash64`` over a distinct
+    string-gram set IS the distinct hash set this path shingles
+    itself; ``array_min`` is duplicate-insensitive, so a 64-bit
+    collision cannot change a signature), and candidates verify
+    against the bitmaps with jaccard values identical to the hashed
+    arrays — both count the same distinct-gram sets. With both
+    frames provided this path never rescans the corpus.
+
+    Without ``bits``, verification dispatches on the corpus
+    vocabulary (:func:`_gram_bitmaps`): bitmaps when it fits
+    ``_BITMAP_VOCAB_CAP``, the gram arrays otherwise — identical
+    values either way.
+
+    ``pin_result`` (default on) ends the pipeline with a lazy
+    ``localCheckpoint`` of the verified pairs (see
+    :func:`_verify_jaccard_candidates`). Pass ``False`` when the
+    caller immediately re-materializes the pairs itself.
+
+    Scaling: the pair count is OUTPUT-driven — each doc's near-dup
+    family grows with corpus size in the bench corpora, so the
+    candidate set and the result grow faster than the input
+    (SCALE.md). On a corpus whose dup rate is constant in corpus
+    size, this path is linear in input plus output."""
+    if grams is not None:
+        # pinned now: projection collapse would otherwise inline this
+        # array into each of the num_perm signature transforms —
+        # xxhash64 + array_distinct re-evaluated per permutation
+        shingled = partitioning.pin_now(grams.select(
+            F.col(id_col),
+            F.array_distinct(
+                F.transform(F.col("grams"), lambda g: F.xxhash64(g))
+            ).alias("grams"),
+        ))
+    else:
+        shingled = partitioning.pin_now(
+            _shingle_base(df, text_col, id_col, shingle_n)
+        )
+    # empty docs are dropped from the PINNED frame, where the filter
+    # stays put: drop_empty's length predicate is pushed below the
+    # spread into the caller's unpinned upstream plan, measured at
+    # +0.4 s per run_document_pipeline op (500 documents, 4 cores)
+    sig = _signatures(
+        shingled.filter(F.size("grams") > 0), id_col, num_perm, _affine_perm
+    )
+    cand = _lsh_candidates(sig, id_col, bands, num_perm // bands, F.xxhash64)
+    if bits is None:
+        bits = _gram_bitmaps(shingled, id_col)
+    return _verify_jaccard_candidates(
+        shingled, cand, id_col, threshold, pin_result=pin_result, bits=bits
+    )
+
+
+def md5_gram_sets(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int = 5
+) -> DataFrame:
+    """(id, grams) distinct character-shingle STRING sets — the
+    cross-engine basis of the md5 audit twins; docs with no shingles
+    drop out (no near-dup semantics). Public so callers can
+    materialize the frame ONCE and feed it to both the signature
+    build and the exact-Jaccard verification (see
+    plans/doc_clusters.md5_minhash_frames)."""
+    return _shingle_base(
+        df, text_col, id_col, shingle_n, shingle=char_ngrams_of_norm,
+        drop_empty=True,
+    )
+
+
+def md5_minhash_signatures(
+    grams: DataFrame, id_col: str, num_perm: int = 16
+) -> DataFrame:
+    """(id, m0..m{k-1}) md5-basis MinHash signatures from a
+    :func:`md5_gram_sets` frame: component i is the lexicographic
+    min of ``md5('i:' || gram)`` over the doc's grams, computed per
+    row with zero shuffles (:func:`_signatures`)."""
+    return _signatures(grams, id_col, num_perm, _md5_perm)
+
+
+def minhash_near_duplicates_md5(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_perm: int = 16,
+    bands: int = 4,
+    shingle_n: int = 5,
+    threshold: float = 0.6,
+    grams: DataFrame | None = None,
+    sig: DataFrame | None = None,
+    bits: DataFrame | None = None,
+) -> DataFrame:
+    """MinHash+LSH near-dup pairs on a CROSS-ENGINE hash basis:
+    permutation i of a gram is md5("i:" || gram), band buckets are
+    md5 too — so the whole pipeline (signatures → band buckets →
+    candidates → exact string-gram Jaccard) is reproducible
+    bit-for-bit in plain SQL, unlike the xxhash64 fast path
+    (:func:`minhash_near_duplicates`), whose basis is
+    engine-specific. The two differ only in the hashes they pass to
+    the shared stages, so a green value-check here certifies the LSH
+    logic the fast variant shares.
+
+    Costs ~num_perm md5 calls per (doc, gram) and shuffles string
+    grams at verification, so production dedup at 100 TB should run
+    the xxhash64 variant; this one exists for audits and parity
+    gates.
+
+    ``grams`` / ``sig`` accept pre-built (ideally pinned) frames from
+    :func:`md5_gram_sets` / :func:`md5_minhash_signatures`: without
+    them the lazy gram pipeline re-executes once per reference (the
+    band self-join reads sig twice, the verification joins read
+    grams twice more). ``bits`` accepts the session-memoized
+    gram-bitmap frame over the SAME grams
+    (``plans.doc_clusters.md5_gram_bits``): candidates then verify by
+    popcount instead of ``array_intersect`` over ~1000-string arrays,
+    with identical values. Deliberately NOT self-built here:
+    un-memoized, the vocabulary statistic and bitmap build re-run per
+    invocation and cost more than they save."""
+    if grams is None:
+        grams = md5_gram_sets(df, text_col, id_col, shingle_n)
+    if sig is None:
+        sig = md5_minhash_signatures(grams, id_col, num_perm)
+    cand = _lsh_candidates(sig, id_col, bands, num_perm // bands, F.md5)
+    return _verify_jaccard_candidates(
+        grams, cand, id_col, threshold, pin_result=False, bits=bits
+    )
+
+
+# ---------------------------------------------------------------------------
+# SimHash and 64-bit signature pairing
+# ---------------------------------------------------------------------------
+
+
+def _simhash(hashed: DataFrame, id_col: str, n_bits: int) -> DataFrame:
+    """(id, simhash) from (id, h) token-hash rows: each of the low
+    ``n_bits`` bits of h votes ±1 per token occurrence (token
+    multiplicity counts, ties clear the bit) and the signs recombine
+    into a long.
+
+    Bit-EXPLODED formulation: (token, bit) rows → ``sum(±1)`` votes
+    per (doc, bit) → signs recombined by a second tiny aggregate.
+    The 64×-row explode wins over a 64-vote-column single aggregate
+    (measured 2× cold, 4× warm): the expression tree is ~64× smaller
+    (codegen compiles in ms, not seconds) and both aggregations run
+    map-side partial, so the shuffle carries ≤ n_bits small rows per
+    doc per partition."""
+    votes = (
+        hashed.select(
+            id_col,
+            F.explode(F.sequence(F.lit(0), F.lit(n_bits - 1))).alias("bit"),
+            "h",
+        )
+        .select(
+            id_col,
+            "bit",
+            F.expr("(shiftright(h, bit) & 1) * 2 - 1").alias("v"),
+        )
+        .groupBy(id_col, "bit")
+        .agg(F.sum("v").alias("vs"))
+    )
+    bit_value = F.expr(
+        "CASE WHEN bit < 63 THEN shiftleft(1L, bit) "
+        "ELSE CAST(-9223372036854775808 AS BIGINT) END"
+    )
+    return votes.groupBy(id_col).agg(
+        F.sum(
+            F.when(F.col("vs") > 0, bit_value).otherwise(
+                F.lit(0).cast("long")
+            )
+        ).alias("simhash")
+    )
+
+
+def _chunk_pairs(
+    frame: DataFrame,
+    id_col: str,
+    hash_col: str,
+    bounds: list[int],
+    max_hamming: int,
+) -> DataFrame:
+    """(id_a, id_b, hamming), id_a < id_b, hamming ≤ max_hamming:
+    candidates share at least one chunk ``[bounds[c], bounds[c+1])``
+    of ``hash_col`` (chunk self-join on (chunk, key)), then are
+    verified with ``bit_count(a XOR b)``. The self-join shuffles
+    (id, hash, chunk key) rows only."""
+
+    def chunk_key(lo: int, hi: int):
+        if hi - lo >= 64:  # one 64-bit chunk: exact-equality join
+            return F.col(hash_col)
+        return F.shiftrightunsigned(hash_col, lo).bitwiseAND(
+            F.lit((1 << (hi - lo)) - 1)
+        )
+
+    chunks = F.array(*[
+        F.struct(F.lit(c).alias("chunk"), chunk_key(lo, hi).alias("key"))
+        for c, (lo, hi) in enumerate(zip(bounds, bounds[1:]))
+    ])
+    banded = frame.select(
+        id_col, hash_col, F.explode(chunks).alias("cc")
+    ).select(id_col, hash_col, "cc.chunk", "cc.key")
+
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            F.col(id_col).alias(f"id_{s}"), F.col(hash_col).alias(f"h_{s}"),
+            "chunk", "key",
+        )
+
+    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
+    return (
+        side("a").join(side("b"), on=["chunk", "key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+        .withColumn("hamming", hamming)
+        .filter(F.col("hamming") <= max_hamming)
+        .select("id_a", "id_b", "hamming")
+    )
+
+
+def simhash64_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """64-bit SimHash per document as (id, simhash long): xxhash64 of
+    each whitespace token of the normalized text, voted by
+    :func:`_simhash`."""
+    token = F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("t")
+    hashed = (
+        partitioning.spread(df.select(F.col(id_col), F.col(text_col)), id_col)
+        .select(F.col(id_col), token)
+        .select(id_col, F.xxhash64("t").alias("h"))
+    )
+    return _simhash(hashed, id_col, 64)
+
+
+def hash64_near_dup_pairs(
+    frame: DataFrame,
+    id_col: str,
+    hash_col: str,
+    max_hamming: int = 3,
+) -> DataFrame:
+    """Near-dup pairs over ANY 64-bit signature column (SimHash,
+    image dHash, audio fingerprint): the 64 bits are split into
+    ``max_hamming + 1`` contiguous chunks, so a pair within the
+    threshold has at least one chunk equal by pigeonhole — banding
+    is LOSSLESS at any threshold (a fixed 4×16-bit split would
+    under-recall for max_hamming > 3). Candidates are verified with
+    ``bit_count(a XOR b) <= max_hamming``. Returns
+    (id_a, id_b, hamming) with id_a < id_b. The self-join shuffles
+    (max_hamming + 1) × 20-ish bytes per row at any corpus size —
+    larger thresholds pay more bands AND denser buckets, the honest
+    LSH trade."""
+    if not 0 <= max_hamming <= 63:
+        raise ValueError(
+            f"max_hamming must be in 0..63, got {max_hamming} "
+            "(64-bit signatures cannot band beyond 63)"
+        )
+    n = max_hamming + 1
+    return _chunk_pairs(
+        frame, id_col, hash_col, [64 * c // n for c in range(n + 1)],
+        max_hamming,
+    )
+
+
+def simhash_near_duplicates(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    max_hamming: int = 3,
+) -> DataFrame:
+    """SimHash near-dup pairs: pigeonhole chunk banding for
+    candidates, verified with ``bit_count(a XOR b) <= max_hamming``
+    (:func:`hash64_near_dup_pairs`)."""
+    # the chunk self-join references sim on both sides — materialize
+    # the (id, simhash) table once instead of re-voting every bitplane
+    # twice; spread first so the checkpoint doesn't freeze an
+    # AQE-coalesced 1-partition layout
+    sim = partitioning.spread(
+        simhash64_table(df, text_col, id_col), id_col
+    ).localCheckpoint(eager=False)
+    return hash64_near_dup_pairs(sim, id_col, "simhash", max_hamming)
+
+
+def simhash_near_duplicates_md5(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    max_hamming: int = 3,
+) -> DataFrame:
+    """SimHash near-dup pairs on a CROSS-ENGINE hash basis: each
+    token's 32-bit hash is the first 8 hex chars of md5(token), so
+    the whole pipeline — bit votes → 32-bit simhash → 8-bit-chunk
+    banding → ``bit_count(xor) <= max_hamming`` verification — is
+    reproducible bit-for-bit in plain SQL. The auditable twin of
+    :func:`simhash_near_duplicates` (engine-specific xxhash64, 64
+    bits): the same vote and chunk-pairing stages, only the token
+    hash, the width and the fixed 4 × 8-bit chunk layout (full
+    recall for hamming ≤ 3) differ — a green value-check here
+    certifies the banding/vote logic the fast variant shares.
+
+    Costs one md5 per DISTINCT token (vocab-hashed once, joined
+    back) and a 32× bit explode, so production dedup should run the
+    64-bit xxhash64 variant; this exists for audits and parity
+    gates."""
+    toks = partitioning.spread(
+        df.select(F.col(id_col), F.col(text_col)), id_col
+    ).select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t"))
+    # hash each distinct token once; md5 is deterministic, so this
+    # is identical to hashing inline, at vocab cost not instance cost
+    vocab = toks.select("t").distinct().select(
+        "t",
+        F.conv(F.substring(F.md5("t"), 1, 8), 16, 10)
+        .cast("long")
+        .alias("h"),
+    )
+    sim = partitioning.spread(
+        _simhash(toks.join(vocab, "t").select(id_col, "h"), id_col, 32),
+        id_col,
+    ).localCheckpoint(eager=False)  # same guard as simhash_near_duplicates
+    return _chunk_pairs(
+        sim, id_col, "simhash", [0, 8, 16, 24, 32], max_hamming
+    ).select("id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
+
+
+# ---------------------------------------------------------------------------
+# n-gram Jaccard similarity joins
+# ---------------------------------------------------------------------------
+
+
+def _rare_gram_rows(
+    base: DataFrame,
+    block_cols,
+    id_col: str,
+    max_df: int,
+    gram_df: DataFrame | None = None,
+) -> DataFrame:
+    """(*block_cols, id, g) rows of the grams whose block-local
+    document frequency is ≤ max_df."""
+    if gram_df is None:
+        gram_df = _gram_df(base, block_cols)
+    rare = gram_df.filter(F.col("__df") <= max_df).select(*block_cols, "g")
+    return _exploded(base, id_col, block_cols).join(
+        rare, on=[*block_cols, "g"]
+    )
+
+
+def _shared_gram_pairs(
+    exploded: DataFrame, block_cols, id_col: str
+) -> DataFrame:
+    """The inverted-index self-join: one (id_a, id_b) row, id_a < id_b,
+    per gram two documents of the same block share."""
+    return (
+        exploded.select(*block_cols, F.col(id_col).alias("id_a"), "g")
+        .join(
+            exploded.select(*block_cols, F.col(id_col).alias("id_b"), "g"),
+            on=[*block_cols, "g"],
+        )
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+
+
+def _capped_candidates(
+    base: DataFrame,
+    block_cols,
+    id_col: str,
+    max_df: int,
+    gram_df: DataFrame | None = None,
+) -> DataFrame:
+    """df-capped inverted-index candidate pairs over a
+    (*block_cols, id, grams) frame: pairs are generated only from
+    grams with block-local document frequency ≤ max_df, bounding
+    candidate work at max_df × corpus grams (linear). Shared by
+    :func:`ngram_jaccard_pairs` and :func:`similarity_join`."""
+    # NB: an explicit keyed repartition of the rare-gram rows on the
+    # join key (to defeat AQE's byte-based coalescing of the
+    # CPU-dense pair generation — it runs on ~5 of 32 tasks at sf0.1)
+    # was tried and REVERTED: the repartition exchanges the FULL
+    # exploded gram table (71 MB shuffle write at sf0.1 vs the 5 MB
+    # the planner's own aggregated exchange carries) and its subtree
+    # was NOT reused across the self-join sides — doc_cluster_build
+    # went 22.8 s -> 66.9 s standalone. The ~1.5 s-wall coalesced
+    # stage is the cheaper evil at this scale; at cluster scale the
+    # join's own exchanges are byte-large enough that AQE sizes them
+    # correctly.
+    rare = _rare_gram_rows(base, block_cols, id_col, max_df, gram_df)
+    return (
+        _shared_gram_pairs(rare, block_cols, id_col)
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    block_cols: list[str],
+    n: int = 3,
+    threshold: float = 0.5,
+    max_df: int | None = None,
+    allow_quadratic: bool = False,
+    pin_result: bool = True,
+) -> DataFrame:
+    """Exact n-gram-set Jaccard similarity for all pairs sharing a
+    blocking key (e.g. language + length bucket). Returns
+    (id_a, id_b, jaccard) with id_a < id_b.
+
+    Blocking keeps the self-join from being quadratic ACROSS blocks,
+    but within a block the inverted-index candidate work is
+    Σ_gram df(gram)² — quadratic in block size when grams are
+    ubiquitous (small-vocabulary corpora: measured 101× partials for
+    10× data on the sf1 scale replica). ``max_df`` is the scale
+    valve: candidate pairs are generated only from grams whose
+    block-local document frequency is ≤ max_df (bounding candidate
+    work at max_df × corpus grams — linear), then each candidate's
+    Jaccard is verified EXACTLY (:func:`_verify_jaccard_candidates`,
+    bitmaps on small-vocabulary blocks), so every returned value is
+    exact and every returned pair is real. The approximation is
+    one-sided recall: a pair sharing ONLY ubiquitous grams is missed
+    — precisely the pairs whose shared evidence is least
+    discriminative (the stop-word-dropping standard from the
+    similarity-join literature). ``max_df=None`` (default) is fully
+    exact: the inverted index COUNTS shared grams per pair with
+    map-side partial aggregation, so the shuffle carries
+    (id_a, id_b, count) partials, never gram arrays, and
+    zero-intersection pairs never appear (exact for any threshold
+    > 0). It is soft-guarded: past ~2 GiB of input (≈ sf2 here;
+    measured 77-133× slope per 10× data, SCALE.md) a RuntimeWarning
+    points at the ``max_df`` valve; ``allow_quadratic=True``
+    acknowledges the cost (partitioning.warn_if_quadratic)."""
+    if not threshold > 0.0:
+        # validated BEFORE the base frame: pin_now below runs a Spark
+        # job, which a bad-argument call must not pay first
+        raise ValueError(
+            "threshold must be > 0: the inverted-index formulation "
+            "never sees pairs with an empty intersection"
+        )
+    if max_df is None:
+        partitioning.warn_if_quadratic(
+            df, "ngram_jaccard_pairs(max_df=None)",
+            allow_quadratic=allow_quadratic,
+        )
+    # Materialized NOW: the verify joins broadcast both array sides,
+    # and those BroadcastExchange jobs launch CONCURRENTLY — with a
+    # purely lazy checkpoint each one recomputes the normalize+shingle
+    # pipeline before any blocks exist.
+    base = partitioning.pin_now(
+        _shingle_base(df, text_col, id_col, n, block_cols)
+    )
+    if max_df is not None:
+        # one gram-df aggregate serves the candidate cap AND the
+        # verifier's bitmap dispatch
+        gram_df = _gram_df(base, block_cols).localCheckpoint(eager=False)
+        cand = _capped_candidates(
+            base, block_cols, id_col, max_df, gram_df=gram_df
+        )
+        return _verify_jaccard_candidates(
+            base, cand, id_col, threshold, pin_result=pin_result,
+            bits=_gram_bitmaps(base, id_col, gram_df, block_cols),
+        )
+    exploded = _exploded(base, id_col, block_cols)
+    inter_counts = (
+        _shared_gram_pairs(exploded, block_cols, id_col)
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    sizes = base.select(F.col(id_col), F.size("grams").alias("sz"))
+    pairs = inter_counts.join(
+        sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")),
+        on="id_a",
+    ).join(
+        sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")),
+        on="id_b",
+    )
+    return _jaccard_filter(pairs, threshold)
 
 
 def jaccard_prefix_filter_pairs(
@@ -905,8 +1042,8 @@ def jaccard_prefix_filter_pairs(
     :func:`ngram_jaccard_pairs`, no pair is ever missed: if
     J(A,B) >= t then |A∩B| >= ceil(t*|A|), so by pigeonhole A and B
     must share a gram inside both prefixes under ANY shared total
-    order. Candidates are then verified exactly on the full arrays
-    (same verifier as the max_df path), so precision is exact too.
+    order. Candidates are then verified exactly (same verifier as the
+    max_df path), so precision is exact too.
 
     Scale posture: candidate work is Σ_gram prefix-df(gram)² — the
     canonical order puts each set's RAREST grams in its prefix, so
@@ -929,36 +1066,17 @@ def jaccard_prefix_filter_pairs(
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    base = (
-        _spread(
-            df.select(
-                F.col(id_col), *[F.col(c) for c in block_cols],
-                F.col(text_col),
-            ),
-            id_col,
-        )
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in block_cols],
-            char_ngram_hashes_of_norm(
-                normalize_text(F.col(text_col)), n
-            ).alias("grams"),
-        )
-        # referenced 3× below (prefix build + both verify sides)
-        .localCheckpoint(eager=False)
-    )
-    gram_df = (
-        base.select(*block_cols, F.explode("grams").alias("g"))
-        .groupBy(*block_cols, "g")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .localCheckpoint(eager=False)
-    )
+    # referenced 3× below (prefix build + both verify sides)
+    base = _shingle_base(
+        df, text_col, id_col, n, block_cols
+    ).localCheckpoint(eager=False)
+    gram_df = _gram_df(base, block_cols).localCheckpoint(eager=False)
     cand = _prefix_filter_candidates(
         base, block_cols, id_col, threshold, gram_df=gram_df
     )
     return _verify_jaccard_candidates(
         base, cand, id_col, threshold, pin_result=pin_result,
-        gram_df=gram_df, block_cols=block_cols,
+        bits=_gram_bitmaps(base, id_col, gram_df, block_cols),
     )
 
 
@@ -978,23 +1096,19 @@ def _prefix_filter_candidates(
     the adaptive dispatch estimates its cost from the same gram-df
     statistics this generator keys on. ``base`` is the
     (*block_cols, id, grams) frame the caller checkpointed."""
-    exploded = base.select(
-        *block_cols, F.col(id_col), F.explode("grams").alias("g")
-    )
     # canonical per-block total order: (document frequency asc, gram
     # asc). Any one shared order is correct; rarity-first makes the
     # prefix the least-collisional slice of each set. A caller that
-    # already aggregated the gram table (the adaptive dispatch)
-    # passes it in so the agg runs once per query, not per stage.
+    # already aggregated the gram table passes it in so the agg runs
+    # once per query, not per stage.
     if gram_df is None:
-        gram_df = exploded.groupBy(*block_cols, "g").agg(
-            F.count(F.lit(1)).alias("__df")
-        )
+        gram_df = _gram_df(base, block_cols)
     req_overlap = F.ceil(
         F.lit(threshold) * F.size("__sorted") - F.lit(1e-6)
     )
     prefixes = (
-        exploded.join(gram_df, on=[*block_cols, "g"])
+        _exploded(base, id_col, block_cols)
+        .join(gram_df, on=[*block_cols, "g"])
         .groupBy(*block_cols, id_col)
         .agg(
             F.array_sort(F.collect_list(F.struct("__df", "g"))).alias(
@@ -1029,7 +1143,7 @@ def _prefix_filter_candidates(
     # 4.5 -> 6.3 s on ngram_jaccard_prefix at sf0.1 — the prefix
     # table is larger than the rare-gram table and the forced
     # exchange cost more than the width it bought.
-    cand = (
+    return (
         prefixes.select(
             *block_cols,
             F.col(id_col).alias("id_a"),
@@ -1054,7 +1168,6 @@ def _prefix_filter_candidates(
         .select("id_a", "id_b")
         .distinct()
     )
-    return cand
 
 
 def choose_similarity_plan(
@@ -1109,8 +1222,6 @@ def choose_similarity_plan(
     Tie order among equal-df grams doesn't matter: the greedy-fill
     sum depends only on the df-sorted multiset (equal-df grams are
     interchangeable at the slot boundary)."""
-    from pyspark.sql.window import Window
-
     eps = F.lit(1e-6)
     slots_expr = (
         F.size("grams")
@@ -1121,13 +1232,7 @@ def choose_similarity_plan(
         base.agg(F.sum(slots_expr).alias("s")).collect()[0]["s"] or 0
     )
     if gram_df is None:
-        gram_df = (
-            base.select(
-                *block_cols, F.explode("grams").alias("g")
-            )
-            .groupBy(*block_cols, "g")
-            .agg(F.count(F.lit(1)).alias("__df"))
-        )
+        gram_df = _gram_df(base, block_cols)
 
     def pair_work(c):
         # c·(c−1) is even, so the shift is exact integer division —
@@ -1198,46 +1303,24 @@ def similarity_join(
       (pairs sharing ONLY >max_df ubiquitous grams are missed,
       the stop-word-dropping standard).
 
-    Both verify candidates exactly on the full gram arrays, so
-    precision is always exact; the dispatch trades the recall valve
-    against candidate-work blowup per corpus shape. ``auto=False``
-    keeps the prefix plan unconditionally (full recall, cost be
-    damned). The planning agg shares the generators' own first
-    stage (gram explode + df count), so at 100 TB it costs one
-    extra linear pass + a vocab-sized sort — noise against the
-    candidate join it sizes."""
+    Both verify candidates exactly, so precision is always exact;
+    the dispatch trades the recall valve against candidate-work
+    blowup per corpus shape. ``auto=False`` keeps the prefix plan
+    unconditionally (full recall, cost be damned). The planning agg
+    shares the generators' own first stage (gram explode + df
+    count), so at 100 TB it costs one extra linear pass + a
+    vocab-sized sort — noise against the candidate join it sizes."""
     if not auto:
         return jaccard_prefix_filter_pairs(
             df, text_col, id_col, block_cols, n=n, threshold=threshold,
             pin_result=pin_result,
         )
-    base = (
-        _spread(
-            df.select(
-                F.col(id_col), *[F.col(c) for c in block_cols],
-                F.col(text_col),
-            ),
-            id_col,
-        )
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in block_cols],
-            char_ngram_hashes_of_norm(
-                normalize_text(F.col(text_col)), n
-            ).alias("grams"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    base = _shingle_base(
+        df, text_col, id_col, n, block_cols
+    ).localCheckpoint(eager=False)
     # one gram-df aggregate serves planning AND whichever generator
     # wins — vocab-sized, so the checkpoint is cheap to hold
-    exploded = base.select(
-        *block_cols, F.col(id_col), F.explode("grams").alias("g")
-    )
-    gram_df = (
-        exploded.groupBy(*block_cols, "g")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .localCheckpoint(eager=False)
-    )
+    gram_df = _gram_df(base, block_cols).localCheckpoint(eager=False)
     decision = choose_similarity_plan(
         base, block_cols, id_col, threshold, max_df, cost_ratio,
         gram_df=gram_df,
@@ -1248,329 +1331,17 @@ def similarity_join(
         )
     else:
         cand = _capped_candidates(
-            exploded, block_cols, id_col, max_df, gram_df=gram_df
+            base, block_cols, id_col, max_df, gram_df=gram_df
         )
     return _verify_jaccard_candidates(
         base, cand, id_col, threshold, pin_result=pin_result,
-        gram_df=gram_df, block_cols=block_cols,
+        bits=_gram_bitmaps(base, id_col, gram_df, block_cols),
     )
 
 
-def _capped_candidates(
-    exploded: DataFrame,
-    block_cols: list[str],
-    id_col: str,
-    max_df: int,
-    gram_df: DataFrame | None = None,
-) -> DataFrame:
-    """df-capped inverted-index candidate pairs over an exploded
-    (*block_cols, id, g) gram table: pairs are generated only from
-    grams with block-local document frequency ≤ max_df, bounding
-    candidate work at max_df × corpus grams (linear). Shared by
-    :func:`ngram_jaccard_pairs` and :func:`similarity_join`."""
-    if gram_df is None:
-        gram_df = exploded.groupBy(*block_cols, "g").agg(
-            F.count(F.lit(1)).alias("__df")
-        )
-    rare_grams = gram_df.filter(F.col("__df") <= max_df).select(
-        *block_cols, "g"
-    )
-    rare = exploded.join(rare_grams, on=[*block_cols, "g"])
-    # NB: an explicit keyed repartition of `rare` on the join key
-    # (to defeat AQE's byte-based coalescing of the CPU-dense pair
-    # generation — it runs on ~5 of 32 tasks at sf0.1) was tried and
-    # REVERTED: the repartition exchanges the FULL exploded gram
-    # table (71 MB shuffle write at sf0.1 vs the 5 MB the planner's
-    # own aggregated exchange carries) and its subtree was NOT
-    # reused across the self-join sides — doc_cluster_build went
-    # 22.8 s -> 66.9 s standalone (driver-style full-suite bench:
-    # 14.2 -> 47.9 s). The ~1.5 s-wall coalesced stage is the
-    # cheaper evil at this scale; at cluster scale the join's own
-    # exchanges are byte-large enough that AQE sizes them correctly.
-    return (
-        rare.select(*block_cols, F.col(id_col).alias("id_a"), "g")
-        .join(
-            rare.select(*block_cols, F.col(id_col).alias("id_b"), "g"),
-            on=[*block_cols, "g"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def md5_gram_sets(
-    df: DataFrame, text_col: str, id_col: str, shingle_n: int = 5
-) -> DataFrame:
-    """(id, grams) distinct character-shingle sets on the
-    cross-engine string basis used by the md5 audit twins; docs with
-    no shingles drop out (no near-dup semantics). Public so callers
-    can materialize the frame ONCE and feed it to both the
-    signature build and the exact-Jaccard verification joins (see
-    plans/doc_clusters.md5_minhash_frames).
-
-    The no-shingle drop is expressed as ``length(nrm) >= n`` BEFORE
-    the shingling projection, not ``size(grams) > 0`` after it —
-    the two are equivalent (the shingle count is
-    ``max(length - (n-1), 0)``), but Catalyst pushes a post-hoc
-    size() filter below both projections, substituting the whole
-    gram pipeline into the predicate with ``normalize_text``
-    re-inlined into the per-ELEMENT substr lambda: one regex per
-    shingle instead of per row, measured 15.7 s vs 0.8 s at sf0.1.
-    The cheap length predicate instead pushes harmlessly to the
-    scan and prunes empty docs before the spread shuffle."""
-    return (
-        _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
-        .select(F.col(id_col), normalize_text(F.col(text_col)).alias("nrm"))
-        .filter(F.length("nrm") >= shingle_n)
-        .select(
-            F.col(id_col),
-            char_ngrams_of_norm(F.col("nrm"), shingle_n).alias("grams"),
-        )
-    )
-
-
-def md5_minhash_signatures(
-    grams: DataFrame, id_col: str, num_perm: int = 16
-) -> DataFrame:
-    """(id, m0..m{k-1}) md5-basis MinHash signatures from a
-    :func:`md5_gram_sets` frame, computed entirely per-row:
-    component i is ``array_min(transform(grams, g -> md5('i:'||g)))``
-    — a narrow map over each doc's gram array with ZERO shuffles.
-
-    An earlier formulation hashed each distinct gram once
-    (explode → distinct → per-vocab md5 → join back → groupBy min)
-    on the theory that instances ≫ vocab makes vocab hashing
-    cheaper. Measured at sf0.1 it is the opposite: the three
-    instance-scale shuffles (distinct, join, groupBy) dominate the
-    saved md5 calls — 9.9 s vs 1.0 s for this per-row build, with
-    bit-identical output (md5 is deterministic per (i, gram), and
-    min-over-array equals min-over-group on a distinct gram set).
-    At 100 TB the gap widens: this build is embarrassingly
-    parallel over doc rows while the old one shuffled every gram
-    instance by value.
-
-    NB the lambda arity trap: ``F.transform`` passes (element,
-    index) to any two-argument callable, so ``lambda g, i=i: ...``
-    silently receives the ARRAY INDEX as ``i`` — the permutation
-    id must be bound via an outer closure, as here."""
-
-    def perm(i: int):
-        return lambda g: F.md5(F.concat_ws(":", F.lit(str(i)), g))
-
-    return grams.select(
-        F.col(id_col),
-        *[
-            F.array_min(F.transform(F.col("grams"), perm(i))).alias(
-                f"m{i}"
-            )
-            for i in range(num_perm)
-        ],
-    )
-
-
-def minhash_near_duplicates_md5(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 16,
-    bands: int = 4,
-    shingle_n: int = 5,
-    threshold: float = 0.6,
-    grams: DataFrame | None = None,
-    sig: DataFrame | None = None,
-    bits: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash+LSH near-dup pairs on a CROSS-ENGINE hash basis:
-    permutation i of a gram is md5("i:" || gram), and the signature
-    component is the lexicographic MIN of those hex strings — md5 is
-    identical in every engine, so the whole pipeline (signatures →
-    band buckets → candidates → exact string-gram Jaccard) is
-    reproducible bit-for-bit in plain SQL, unlike the xxhash64 fast
-    path (:func:`minhash_near_duplicates`), whose basis is
-    engine-specific. This is the auditable twin: same banding
-    structure, same candidate semantics, same exact verification —
-    a green value-check here certifies the LSH logic the fast
-    variant shares.
-
-    Costs ~num_perm md5 calls per (doc, gram) and shuffles string
-    grams at verification, so production dedup at 100 TB should run
-    the xxhash64 variant; this one exists for audits and parity
-    gates. Same scale shape otherwise: band-bucket equi-join on ids,
-    never documents.
-
-    ``grams`` / ``sig`` accept pre-built (ideally materialized)
-    frames from :func:`md5_gram_sets` / :func:`md5_minhash_signatures`:
-    without them the lazy gram pipeline re-executes up to 4× (band
-    self-join references sig twice; the two verification joins
-    reference grams twice more) — the r6 bench read 15.7 s at sf0.1
-    for exactly that reason. With localCheckpointed frames
-    (plans/doc_clusters.md5_minhash_frames) each pipeline runs once.
-
-    ``bits`` accepts a pre-built, session-memoized (id, __sz,
-    __bits) gram-bitmap frame (:func:`_bitmap_doc_frame` over the
-    SAME grams — see plans.doc_clusters.md5_gram_bits): candidates
-    are then verified by popcount-of-AND instead of
-    ``array_intersect`` over the ~1000-string arrays, with
-    identical jaccard values. Deliberately NOT self-built here:
-    un-memoized, the vocab scalar + dictionary + bitmap build
-    re-run per invocation and cost more than they save."""
-    rows = num_perm // bands
-    if grams is None:
-        grams = md5_gram_sets(df, text_col, id_col, shingle_n)
-    if sig is None:
-        sig = md5_minhash_signatures(grams, id_col, num_perm)
-
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[F.col(f"m{b * rows + r}") for r in range(rows)],
-                )
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select(
-        id_col, F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
-
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), on=["band", "bucket"])
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-    if bits is not None:
-        return _verify_jaccard_candidates_bitmap(
-            bits, cand, id_col, threshold, pin_result=False
-        )
-
-    from big_data_processing_spark.partitioning import spread_even
-
-    pairs = (
-        # keyless spread — same verify-width rationale as
-        # minhash_near_duplicates / _verify_jaccard_candidates
-        spread_even(cand)
-        .join(
-            grams.select(
-                F.col(id_col).alias("id_a"), F.col("grams").alias("__ga")
-            ),
-            on="id_a",
-        )
-        .join(
-            grams.select(
-                F.col(id_col).alias("id_b"), F.col("grams").alias("__gb")
-            ),
-            on="id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__ga", "__gb")).alias("__i"),
-            F.size("__ga").alias("__sa"),
-            F.size("__gb").alias("__sb"),
-        )
-    )
-    jac = F.col("__i").cast("double") / (
-        F.col("__sa") + F.col("__sb") - F.col("__i")
-    )
-    return (
-        pairs.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def simhash_near_duplicates_md5(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup pairs on a CROSS-ENGINE hash basis: each
-    token's 32-bit hash is the first 8 hex chars of md5(token), so
-    the whole pipeline — bit votes → 32-bit simhash → 8-bit-chunk
-    banding → ``bit_count(xor) <= max_hamming`` verification — is
-    reproducible bit-for-bit in plain SQL. The auditable twin of
-    :func:`simhash_near_duplicates` (engine-specific xxhash64, 64
-    bits): same vote semantics (token multiplicity counts, ties
-    clear the bit), same pigeonhole banding structure (4 chunks
-    guarantee recall for hamming ≤ 3), same verification — a green
-    value-check here certifies the banding/vote logic the fast
-    variant shares.
-
-    Costs one md5 per DISTINCT token (vocab-hashed once, joined
-    back) and a 32× bit explode, so production dedup should run the
-    64-bit xxhash64 variant; this exists for audits and parity
-    gates. Scale shape is identical: chunk-bucket equi-join on
-    (id, simhash) only, never text."""
-    toks = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t")
-    )
-    # hash each distinct token once; md5 is deterministic, so this
-    # is identical to hashing inline, at vocab cost not instance cost
-    vocab = toks.select("t").distinct().select(
-        "t",
-        F.conv(F.substring(F.md5("t"), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
-    )
-    hashed = toks.join(vocab, "t").select(id_col, "h")
-    bits = hashed.select(
-        F.col(id_col),
-        F.explode(F.sequence(F.lit(0), F.lit(31))).alias("bit"),
-        "h",
-    ).select(
-        id_col,
-        "bit",
-        F.expr("(shiftright(h, bit) & 1) * 2 - 1").alias("v"),
-    )
-    votes = bits.groupBy(id_col, "bit").agg(F.sum("v").alias("vs"))
-    sim_table = votes.groupBy(id_col).agg(
-        F.sum(
-            F.when(F.col("vs") > 0, F.expr("shiftleft(1L, bit)")).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).alias("sh")
-    )
-    # chunk self-join references sim on both sides — materialize once
-    # (same checkpoint guard as simhash_near_duplicates)
-    sim = _spread(sim_table, id_col).localCheckpoint(eager=False)
-    chunks = F.array(*[
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.expr(f"shiftright(sh, {8 * c}) & 255").alias("key"),
-        )
-        for c in range(4)
-    ])
-    banded = sim.select(
-        id_col, "sh", F.explode(chunks).alias("cc")
-    ).select(id_col, "sh", "cc.chunk", "cc.key")
-    left = banded.select(
-        F.col(id_col).alias("id_a"), F.col("sh").alias("h_a"),
-        "chunk", "key",
-    )
-    right = banded.select(
-        F.col(id_col).alias("id_b"), F.col("sh").alias("h_b"),
-        "chunk", "key",
-    )
-    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return (
-        left.join(right, on=["chunk", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", hamming.cast("bigint"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+# ---------------------------------------------------------------------------
+# Winnowing (substring evidence)
+# ---------------------------------------------------------------------------
 
 
 def winnow_share_pairs(
@@ -1589,19 +1360,19 @@ def winnow_share_pairs(
     not contiguous matches). Returns (id_a, id_b, n_shared).
 
     Fingerprints with document frequency > ``max_df`` are excluded
-    from pairing: winnow minima of ubiquitous substrings (boilerplate,
-    stock phrases) would otherwise drive Σ df² candidate work
-    quadratic (measured Σ df² ≈ 5.9e8 at sf0.1 uncapped on this
-    corpus vs bounded ≤ max_df × total fingerprints capped). The cut
-    is DETERMINISTIC (a pure df filter), so results remain exactly
-    reproducible in SQL — unlike a sampled or probabilistic cut.
+    from pairing (the df-capped inverted index of the n-gram family,
+    over fingerprints): winnow minima of ubiquitous substrings
+    (boilerplate, stock phrases) would otherwise drive Σ df²
+    candidate work quadratic (measured Σ df² ≈ 5.9e8 at sf0.1
+    uncapped on this corpus vs bounded ≤ max_df × total fingerprints
+    capped). The cut is DETERMINISTIC (a pure df filter), so results
+    remain exactly reproducible in SQL — unlike a sampled or
+    probabilistic cut.
 
     Hash basis is md5 (cross-engine); the sketch is ~|doc|/window
     fingerprints, so this is the cheaper pairing substrate at scale
     compared to raw gram inverted indexes."""
-    normed = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col), normalize_text(F.col(text_col)).alias("nrm")
-    )
+    normed = _normalized(df, text_col, id_col)
     count = F.greatest(F.length("nrm") - (k - 1), F.lit(0))
     idx = F.when(count > 0, F.sequence(F.lit(1), count)).otherwise(
         F.array().cast("array<int>")
@@ -1612,8 +1383,6 @@ def winnow_share_pairs(
             idx, lambda i: F.md5(F.col("nrm").substr(i, F.lit(k)))
         ).alias("h"),
     )
-    from big_data_processing_spark.functions.text import winnow_of_hashes
-
     # materialize the sketch BEFORE exploding: generator filter
     # inference would otherwise inline the winnow HOF chain through
     # the select boundaries and re-evaluate it per exploded row
@@ -1621,22 +1390,13 @@ def winnow_share_pairs(
     # lineage cut also lets the df-filter join below reference the
     # exploded frame twice without re-running the sketch
     sk = hashed.select(
-        F.col(id_col), winnow_of_hashes(F.col("h"), window).alias("fps")
+        F.col(id_col), winnow_of_hashes(F.col("h"), window).alias("grams")
     ).localCheckpoint(eager=False)
-    ex = sk.select(F.col(id_col), F.explode("fps").alias("fp"))
-    rare = ex.join(
-        ex.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") <= max_df)
-        .select("fp"),
-        on="fp",
-    )
+    rare = _rare_gram_rows(sk, [], id_col, max_df)
     # fingerprints are distinct per doc (winnow dedups), so count(*)
     # per pair IS the shared-fingerprint count
     return (
-        rare.select(F.col(id_col).alias("id_a"), "fp")
-        .join(rare.select(F.col(id_col).alias("id_b"), "fp"), on="fp")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _shared_gram_pairs(rare, [], id_col)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from big_data_processing_spark import partitioning
 from big_data_processing_spark.functions.similarity import cosine
 
 
@@ -74,9 +75,8 @@ def kmeans_assign(
     ``allow_quadratic=True`` acknowledges the cost.
     """
     from big_data_processing_spark.functions.similarity import _dot
-    from big_data_processing_spark.partitioning import warn_if_quadratic
 
-    warn_if_quadratic(
+    partitioning.warn_if_quadratic(
         emb, "kmeans_assign (flat Lloyd)", allow_quadratic=allow_quadratic
     )
 
@@ -193,9 +193,7 @@ def kmeans_assign_twolevel(
     # Member frame feeds seed selection, both scoring passes and the
     # Lloyd update — materialize the coarse lineage ONCE (swept by
     # release_leaked_checkpoints, same policy as semantic_dedup_pairs).
-    from big_data_processing_spark.partitioning import pin_now
-
-    m = pin_now(coarse.join(e, on=id_col))
+    m = partitioning.pin_now(coarse.join(e, on=id_col))
 
     # Per-cell sub-k and deterministic seeds: the k2 lowest ids.
     k2 = (
@@ -299,9 +297,7 @@ def semantic_dedup_pairs(
     # Both sides of the within-cluster self-join read the member
     # frame; materialize it ONCE (the k-means lineage above it would
     # otherwise execute twice). Swept by release_leaked_checkpoints.
-    from big_data_processing_spark.partitioning import pin_now, spread_even
-
-    m = pin_now(m)
+    m = partitioning.pin_now(m)
 
     # On a SMALL corpus the cluster key has few distinct values (k ∝
     # n/target) and the frame is byte-small, so the keyed self-join
@@ -322,7 +318,7 @@ def semantic_dedup_pairs(
     dim = int(first["d"]) if first else 0
     m_bytes = n_m * (8 * (dim + 4))
     small = 0 < m_bytes <= 64 << 20
-    a_src = spread_even(m) if small else m
+    a_src = partitioning.spread_even(m) if small else m
     a = a_src.select(
         F.col("cluster"),
         F.col(id_col).alias("id_a"),

@@ -10,12 +10,13 @@ Scale notes
   graphs are unions of small cliques, so 3-5 rounds typically
   suffice. Each round is one join + one aggregate on (id, label)
   pairs — never document payloads.
-- Every iteration TRUNCATES LINEAGE (eager localCheckpoint after an
-  explicit repartition): without it the plan doubles per round and
-  the driver dies in analysis long before the executors break a
-  sweat. This is the canonical legitimate checkpoint use —
-  iterative algorithms — unlike the self-join "optimization" that
-  SCALE.md warns about.
+- Every iteration TRUNCATES LINEAGE (a lazy localCheckpoint that
+  the round's own convergence count materializes; the edge list and
+  the seed labels are pinned with ``partitioning.pin_now``): without
+  it the plan doubles per round and the driver dies in analysis
+  long before the executors break a sweat. This is the canonical
+  legitimate checkpoint use — iterative algorithms — unlike the
+  self-join "optimization" that SCALE.md warns about.
 - Superseded rounds are FREED (``release_checkpoint``):
   ``spark.catalog.clearCache()`` does not touch localCheckpoint
   block storage, so without explicit release the loop leaks one
@@ -38,13 +39,16 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from big_data_processing_spark import partitioning
+
 _log = logging.getLogger(__name__)
 
 
 def release_checkpoint(df: DataFrame) -> None:
-    """Free the storage blocks behind a ``localCheckpoint(eager=True)``
-    DataFrame. The frame is UNUSABLE afterwards — only call on frames
-    nothing references anymore (a superseded loop round).
+    """Free the storage blocks behind a local-checkpointed DataFrame
+    (``partitioning.pin_now``, or a lazy ``localCheckpoint`` an action
+    has materialized). The frame is UNUSABLE afterwards — only call
+    on frames nothing references anymore (a superseded loop round).
 
     Uses private plan internals (no public API frees checkpoint
     blocks; ``spark.catalog.clearCache()`` does not touch them), so
@@ -117,10 +121,8 @@ def connected_components(
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    from big_data_processing_spark.partitioning import pin_now
-
     # materialize the edge list once — every round re-reads it
-    sym = pin_now(sym)
+    sym = partitioning.pin_now(sym)
     verts = sym.select(F.col("src").alias("id")).distinct()
     # NOTE: no spread() here, by measurement — label frames are
     # (id, label) pairs whose compute tracks their byte size, so
@@ -128,7 +130,7 @@ def connected_components(
     # graphs (narrow, low scheduling overhead) AND for huge ones
     # (stays wide). Forcing defaultParallelism-wide rounds made the
     # sf0.1 run 5× slower on scheduling overhead alone.
-    labels = pin_now(verts.withColumn("comp", F.col("id")))
+    labels = partitioning.pin_now(verts.withColumn("comp", F.col("id")))
 
     for _round_no in range(1, max_iter + 1):
         nb = (
@@ -247,9 +249,7 @@ def pagerank(
     # build lineage) so iterations don't re-run the upstream joins.
     # Blocks are swept by the harness's release_leaked_checkpoints
     # after the consuming query completes.
-    from big_data_processing_spark.partitioning import pin_now
-
-    norm = pin_now(norm)
+    norm = partitioning.pin_now(norm)
     teleport = (1.0 - damping) / n_nodes
     pr = nodes.select(F.col(node), F.lit(1.0 / n_nodes).alias("pr"))
     for _ in range(iters):

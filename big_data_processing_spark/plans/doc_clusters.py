@@ -7,10 +7,11 @@ same expensive intermediate: the exact-Jaccard pair graph over
 doubles the dominant cost of the whole suite (r3 bench: 21.2 s +
 9.2 s for two queries that differ only in a final window), so the
 cluster frame is built once per (SparkContext, corpus dir, params)
-and memoized as an eager ``localCheckpoint`` — the engine-level
-analogue of a materialized view over a deterministic pipeline.
+and memoized as a pinned local checkpoint (``partitioning.pin_now``)
+— the engine-level analogue of a materialized view over a
+deterministic pipeline.
 
-Why localCheckpoint and not ``persist()``: the memo must survive the
+Why a local checkpoint and not ``persist()``: the memo must survive the
 caller's cache hygiene (`spark.catalog.clearCache()` between bench /
 driver queries clears the CacheManager but not checkpoint block
 storage), and the frame is tiny — (id, cluster_id, bool) per
@@ -30,7 +31,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_processing_spark.functions.dedup import ngram_jaccard_pairs
+from big_data_processing_spark import partitioning
+from big_data_processing_spark.functions.dedup import (
+    _gram_bitmaps,
+    md5_gram_sets,
+    md5_minhash_signatures,
+    ngram_jaccard_pairs,
+)
 from big_data_processing_spark.operators.graph import dedup_clusters
 from big_data_processing_spark.sources.catalog import load_table
 
@@ -134,14 +141,12 @@ def doc_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=NGRAM_N,
         threshold=THRESHOLD,
         max_df=MAX_DF,
-        # dedup_clusters eagerly checkpoints its symmetrized edge
-        # list right away — pinning the pair frame too would
-        # materialize the same rows twice
+        # dedup_clusters pins its symmetrized edge list right away —
+        # pinning the pair frame too would materialize the same rows
+        # twice
         pin_result=False,
     )
-    from big_data_processing_spark.partitioning import pin_now
-
-    clusters = pin_now(dedup_clusters(pairs))
+    clusters = partitioning.pin_now(dedup_clusters(pairs))
     # Drop (dict-only) entries of stopped applications — their block
     # storage died with the context. Same-app entries are KEPT, one
     # per (dir, params): releasing a live frame an earlier caller may
@@ -161,6 +166,17 @@ MH_NUM_PERM = 8
 MH_SHINGLE_N = 5
 
 
+def _md5_key(spark: SparkSession, sf_dir: str) -> tuple:
+    """Memo-key prefix of the md5 audit frames."""
+    return (
+        spark.sparkContext.applicationId,
+        os.path.abspath(sf_dir),
+        "md5mh",
+        MH_NUM_PERM,
+        MH_SHINGLE_N,
+    )
+
+
 def md5_minhash_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -171,31 +187,22 @@ def md5_minhash_frames(
     (band self-join + two verification joins) — r6 bench: 15.7 s at
     sf0.1, ~160 s at sf1, vs 3 s for the xxhash64 fast path that
     shares the same LSH structure. Building each frame once per
-    (applicationId, corpus dir, params) and pinning it as an eager
-    ``localCheckpoint`` removes the recomputation without touching
-    the result (both frames are deterministic). Frame sizes are
+    (applicationId, corpus dir, params) and pinning it
+    (``partitioning.pin_now``) removes the recomputation without
+    touching the result (both frames are deterministic). Frame sizes are
     bounded: grams is the distinct-shingle set per doc (~5 bytes per
     corpus char), sig is num_perm md5 hex strings per doc."""
-    from big_data_processing_spark.functions.dedup import (
-        md5_gram_sets,
-        md5_minhash_signatures,
-    )
-
-    base = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        "md5mh",
-        MH_NUM_PERM,
-        MH_SHINGLE_N,
-    )
+    base = _md5_key(spark, sf_dir)
     gkey, skey = (*base, "grams"), (*base, "sig")
     if gkey in _CACHE and skey in _CACHE:
         return _CACHE[gkey], _CACHE[skey]
     docs = load_table(spark, sf_dir, "documents")
-    from big_data_processing_spark.partitioning import pin_now
-
-    grams = pin_now(md5_gram_sets(docs, "text", "doc_id", MH_SHINGLE_N))
-    sig = pin_now(md5_minhash_signatures(grams, "doc_id", MH_NUM_PERM))
+    grams = partitioning.pin_now(
+        md5_gram_sets(docs, "text", "doc_id", MH_SHINGLE_N)
+    )
+    sig = partitioning.pin_now(
+        md5_minhash_signatures(grams, "doc_id", MH_NUM_PERM)
+    )
     for old_key in list(_CACHE):
         if old_key[0] != base[0]:
             del _CACHE[old_key]
@@ -206,44 +213,20 @@ def md5_minhash_frames(
 
 def md5_gram_bits(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     """Memoized gram-BITMAP frame over the md5 string-gram basis
-    (``_bitmap_doc_frame`` over the memoized :func:`md5_minhash_frames`
-    grams) — shared by every audit that exact-verifies pairs against
-    the string gram sets (the twin's verification join and the
-    fast-path audit's precision re-check each paid an
+    (``dedup._gram_bitmaps`` over the memoized
+    :func:`md5_minhash_frames` grams) — shared by every audit that
+    exact-verifies pairs against the string gram sets (the twin's
+    verification join and the fast-path audit's precision re-check
+    each paid an
     ``array_intersect`` over ~1000-string arrays per pair; popcount
     over the bitmap is ~30× less work with identical jaccard
     values). Returns ``None`` when the corpus vocabulary exceeds the
-    bitmap cap — callers then keep the array path."""
-    from big_data_processing_spark.functions.dedup import (
-        _BITMAP_VOCAB_CAP,
-        _bitmap_doc_frame,
-        _block_gram_dicts,
-    )
-
-    base = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        "md5mh",
-        MH_NUM_PERM,
-        MH_SHINGLE_N,
-    )
-    bkey = (*base, "bits")
+    bitmap cap — callers then keep the array path; that decision is
+    memoized too (it costs a scalar job)."""
+    bkey = (*_md5_key(spark, sf_dir), "bits")
     if bkey in _CACHE:
         return _CACHE[bkey]
     grams, _sig = md5_minhash_frames(spark, sf_dir)
-    vocab_src = (
-        grams.select(F.explode("grams").alias("g"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    vocab = vocab_src.count()
-    if not 0 < vocab <= _BITMAP_VOCAB_CAP:
-        _CACHE[bkey] = None  # memoize the decision too (scalar job)
-        return None
-    bits = _bitmap_doc_frame(
-        grams, [], "doc_id", _block_gram_dicts(vocab_src, []),
-        (vocab + 63) // 64,
-    )
-    bits.count()  # materialize the builder's own lazy checkpoint now
+    bits = _gram_bitmaps(grams, "doc_id")
     _CACHE[bkey] = bits
     return bits

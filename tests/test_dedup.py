@@ -178,10 +178,12 @@ def test_ngram_jaccard_max_df_subset_and_exact_values(spark):
 def test_bitmap_verify_identical_to_array_verify(spark, monkeypatch):
     """The bitmap exact verifier must return the SAME pair set and
     values as the array verifier — same candidates, same distinct-
-    gram-hash sets, only the set representation differs. Pin both
-    directions: default dispatch picks bitmaps on this tiny-vocab
-    corpus (bit_count visible in the plan), and a zeroed vocab cap
-    forces the array path, with identical output."""
+    gram-hash sets, only the set representation differs. Pinned for
+    both operators that dispatch on the vocabulary (the blocked
+    n-gram join and MinHash, whose vocabulary is corpus-wide), on
+    both sides of ``_BITMAP_VOCAB_CAP``: a cap equal to the measured
+    largest block vocabulary picks bitmaps (bit_count in the plan),
+    one below it forces the array path, with identical output."""
     import big_data_processing_spark.functions.dedup as dd
     from big_data_processing_spark.sources.catalog import load_table
 
@@ -189,25 +191,32 @@ def test_bitmap_verify_identical_to_array_verify(spark, monkeypatch):
         "doc_id", "lang", "text"
     )
 
-    def run():
+    def ngram():
         return dd.ngram_jaccard_pairs(
             docs, "text", "doc_id", ["lang"], n=3, threshold=0.3,
             max_df=50, pin_result=False,
         )
 
-    bitmap_df = run()
-    plan = bitmap_df._jdf.queryExecution().optimizedPlan().toString()
-    assert "bit_count" in plan  # dispatch chose the bitmap verifier
-    bitmap = {(r.id_a, r.id_b): r.jaccard for r in bitmap_df.collect()}
+    def minhash():
+        return dd.minhash_near_duplicates(
+            docs, "text", "doc_id", threshold=0.3, pin_result=False
+        )
 
-    monkeypatch.setattr(dd, "_BITMAP_VOCAB_CAP", 0)
-    array_df = run()
-    plan = array_df._jdf.queryExecution().optimizedPlan().toString()
-    assert "bit_count" not in plan  # cap 0 forces the array verifier
-    arr = {(r.id_a, r.id_b): r.jaccard for r in array_df.collect()}
-
-    assert bitmap == arr
-    assert len(bitmap) > 0
+    default_cap = dd._BITMAP_VOCAB_CAP
+    for run, n, block_cols in ((ngram, 3, ["lang"]), (minhash, 5, [])):
+        base = dd._shingle_base(docs, "text", "doc_id", n, block_cols)
+        vocab = dd._max_block_vocab(dd._gram_df(base, block_cols), block_cols)
+        # the default cap takes the bitmap path on this corpus
+        assert 0 < vocab <= default_cap, (run.__name__, vocab)
+        out = {}
+        for cap, bitmap in ((vocab, True), (vocab - 1, False)):
+            monkeypatch.setattr(dd, "_BITMAP_VOCAB_CAP", cap)
+            df = run()
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert ("bit_count" in plan) == bitmap, (run.__name__, cap)
+            out[bitmap] = {(r.id_a, r.id_b): r.jaccard for r in df.collect()}
+        assert out[True] == out[False], run.__name__
+        assert len(out[True]) > 0, run.__name__
 
 
 def test_prefix_filter_identical_to_exact_inverted_index(spark):

@@ -48,6 +48,7 @@ def test_aqe_skew_split_fires(spark):
         k: conf.get(k)
         for k in (
             "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.shuffle.partitions",
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
@@ -56,13 +57,21 @@ def test_aqe_skew_split_fires(spark):
     try:
         # force a shuffle join and make test-scale partitions cross
         # the skew bar (defaults: 256 MB / factor 5 — the same code
-        # path real 100 TB partitions trip without tuning)
+        # path real 100 TB partitions trip without tuning). The
+        # partition count is pinned too: with only a few partitions
+        # the hot key shares its partition with so many cold rows
+        # that no partition reaches twice the median, so the result
+        # would depend on the session's shuffle width. At 16 the hot
+        # partition carries ~4x the median; the shuffle carries only
+        # the pruned, well-compressed join key, hence the small
+        # byte threshold.
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        conf.set("spark.sql.shuffle.partitions", "16")
         conf.set(
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "64KB",
+            "8KB",
         )
-        conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
+        conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4KB")
         conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         left, right = _skewed_pair(spark)
         joined = left.join(right, on="k").groupBy("grp").count()
