@@ -133,7 +133,7 @@ def exact_percentile_values(
 
 def iqr_bounds(
     df: DataFrame, column: str, k: float = 1.5, exact: bool = True
-) -> tuple[float, float]:
+) -> tuple[float | None, float | None]:
     """Compute Tukey-fence bounds ``[q1 - k*IQR, q3 + k*IQR]``.
 
     One aggregate job over a single column. ``exact=True`` uses the
@@ -141,6 +141,9 @@ def iqr_bounds(
     pandas path, `spark_processor.py:86-87`); ``exact=False`` uses
     the sketch-based ``percentile_approx`` the reference's Spark
     path uses (`:121-124`) — the right choice at 100 TB.
+
+    With no non-NULL value the quartiles, and so both bounds, are
+    NULL (``None``), as in SQL: a filter on NULL fences keeps no row.
     """
     if exact:
         # distributed exact twin of the percentile aggregate — no
@@ -151,7 +154,10 @@ def iqr_bounds(
             F.expr(f"percentile_approx({column}, array(0.25, 0.75))")
             .alias("q")
         ).first()
-    q1, q3 = float(row["q"][0]), float(row["q"][1])
+    q = row["q"]
+    if q is None or None in q:
+        return None, None
+    q1, q3 = float(q[0]), float(q[1])
     iqr = q3 - q1
     return q1 - k * iqr, q3 + k * iqr
 

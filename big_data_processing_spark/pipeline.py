@@ -2,10 +2,10 @@
 reference's orchestrator (`/root/reference/src/main.py:88-309`).
 
 Stages (same DAG, Spark-first execution):
-  scan → schema gate → single-pass quality metrics → F1 range clean
-  → F2 IQR outlier filter → P1-P3 enrichment → ONE cache point →
-  fan-out {A1 vendor / A2 category / A3 payment aggs, A10 summary
-  rollup, A4 column stats} → parquet + CSV sinks → unpersist.
+  scan → schema gate → {single-pass quality metrics ‖ F1 range clean
+  → F2 IQR fences} → P1-P3 enrichment → ONE grouping-sets aggregate
+  (A1 vendor / A2 category / A3 payment) → {processed ‖ vendor ‖
+  category ‖ payment ‖ A10 summary} parquet + CSV sinks.
 
 Differences from the reference, by design:
 - Validation is one aggregation pass, not ~2+2·ncols jobs
@@ -15,26 +15,39 @@ Differences from the reference, by design:
   (collapses LocalFileManager / the dead ``write_to_hdfs``,
   `local_file_manager.py:37-54`, `main.py:140-145`).
 - No ``toPandas`` round-trips: aggregates are written distributed;
-  only the tiny metric row is collected.
+  only the metric row and the few grouped-stats rows are collected.
 
 Scale notes
 -----------
-- The single ``cache()`` point pins the cleaned+enriched table once
-  for the multi-agg fan-out (reference's M1 pattern, `main.py:
-  136-137`); everything upstream streams through it one time.
-- Each aggregate is a partial-agg shuffle on its own key; none of
-  them re-reads the source.
-- ``quality_metrics`` and the IQR quantile job are the only extra
-  passes over the raw table, both single-column-pruned scans.
+- The cleaned+enriched table is NOT cached. Its two consumers, the
+  ``processed`` sink and the stats aggregate, each re-run the pruned
+  scan → clean → enrich, which is cheaper than building a cache the
+  size of the table (a one-task job here, and at 100 TB a cache
+  that would not fit).
+- The three group-bys are one ``groupingSets`` aggregate told apart
+  by ``grouping_id()``: one scan and one partial-agg shuffle instead
+  of three, and no range-sampling job per ordered sink. Its result
+  holds one row per key value, so it is cached and collected once;
+  each stats sink is a filter over it, sorted in one partition, and
+  ``clean_rows`` is the sum of the vendor rows' counts.
+- Independent actions are submitted together from a thread pool, so
+  Spark schedules their tasks side by side instead of leaving cores
+  idle behind one-task stages: the quality pass with the IQR fence
+  job, then all five sinks. Each thread inherits the caller's local
+  properties, so every job stays in the caller's job group (and is
+  cancelled with it).
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any
+from functools import partial
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from big_data_processing_spark.monitoring import PipelineMonitor
 from big_data_processing_spark.operators.cleaning import iqr_filter
@@ -63,6 +76,57 @@ class PipelineResult:
     raw_rows: int
     clean_rows: int
     outputs: dict[str, str] = field(default_factory=dict)
+
+
+# Keys of the grouped-stats sinks, in ``groupingSets`` column order.
+STATS_KEYS = ("l_returnflag", "qty_category", "l_linestatus")
+
+
+def _grouping_id(key: str) -> int:
+    """``grouping_id()`` of the grouping set ``[key]``: one bit per
+    ``STATS_KEYS`` column, first column highest, set where that
+    column is aggregated away."""
+    n = len(STATS_KEYS)
+    return sum(1 << (n - 1 - j) for j, k in enumerate(STATS_KEYS) if k != key)
+
+
+def _grouped_stats(enhanced: DataFrame) -> DataFrame:
+    """A1-A3 as one aggregate: a row per value of each key, tagged
+    with its grouping set's ``__gid``."""
+    price = F.col("l_extendedprice")
+    return enhanced.groupingSets([[k] for k in STATS_KEYS], *STATS_KEYS).agg(
+        F.grouping_id().alias("__gid"),
+        F.count(F.lit(1)).alias("total_trips"),
+        F.sum(price).alias("total_revenue"),
+        F.avg("l_quantity").alias("avg_quantity"),
+        F.avg(price).alias("avg_price"),
+        F.avg("price_per_unit").alias("avg_price_per_unit"),
+        F.avg("l_discount").alias("__avg_discount"),
+    )
+
+
+def _stats_for(stats: DataFrame, key: str, *cols: str | Column) -> DataFrame:
+    """One grouping set's rows, ordered by ``key`` in one partition."""
+    return (
+        stats.filter(F.col("__gid") == _grouping_id(key))
+        .select(key, *cols)
+        .coalesce(1)
+        .sortWithinPartitions(key)
+    )
+
+
+def _run_concurrently(spark: SparkSession, *actions: Callable[[], Any]) -> list:
+    """Run independent actions from one thread each and return their
+    results in order. Each thread starts with the caller's local
+    properties (job group, description, scheduler pool), so its jobs
+    are the caller's. Every action ends before the first failure is
+    re-raised, so the caller's cleanup never races a running job."""
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(action))
+            for action in actions
+        ]
+    return [f.result() for f in futures]
 
 
 def run_pipeline(
@@ -95,42 +159,39 @@ def run_pipeline(
         ("invalid_qty", F.col("l_quantity") >= 50),
         ("invalid_discount", F.col("l_discount") > 0.08),
     ]
-    with monitor.stage("quality_metrics") as mrec:
-        quality = quality_metrics(raw, rules).first().asDict()
-        mrec.rows = int(quality["total_rows"])
 
-    cleaned = iqr_filter(clean(raw), "l_extendedprice", exact=False)
-    enhanced = enrich(cleaned).cache()
+    def measure_quality() -> dict[str, Any]:
+        with monitor.stage("quality_metrics") as mrec:
+            quality = quality_metrics(raw, rules).first().asDict()
+            mrec.rows = int(quality["total_rows"])
+        return quality
+
+    quality, cleaned = _run_concurrently(
+        spark,
+        measure_quality,
+        lambda: iqr_filter(clean(raw), "l_extendedprice", exact=False),
+    )
+    enhanced = enrich(cleaned)
+    stats = _grouped_stats(enhanced).cache()
     try:
-        vendor = (
-            enhanced.groupBy("l_returnflag")
-            .agg(
-                F.count(F.lit(1)).alias("total_trips"),
-                F.sum("l_extendedprice").alias("total_revenue"),
-                F.avg("l_quantity").alias("avg_quantity"),
-                F.avg("l_extendedprice").alias("avg_price"),
+        with monitor.stage("aggregates") as arec:
+            vendor_gid = _grouping_id("l_returnflag")
+            clean_rows = sum(
+                r["total_trips"] for r in stats.collect() if r["__gid"] == vendor_gid
             )
-            .orderBy("l_returnflag")
+            arec.rows = clean_rows
+
+        vendor = _stats_for(
+            stats, "l_returnflag",
+            "total_trips", "total_revenue", "avg_quantity", "avg_price",
         )
-        category = (
-            enhanced.groupBy("qty_category")
-            .agg(
-                F.count(F.lit(1)).alias("total_trips"),
-                F.avg("l_extendedprice").alias("avg_price"),
-                F.avg("price_per_unit").alias("avg_price_per_unit"),
-            )
-            .orderBy("qty_category")
+        category = _stats_for(
+            stats, "qty_category", "total_trips", "avg_price", "avg_price_per_unit"
         )
-        payment = (
-            enhanced.groupBy("l_linestatus")
-            .agg(
-                F.count(F.lit(1)).alias("total_trips"),
-                F.avg("l_extendedprice").alias("avg_price"),
-                F.round(
-                    F.avg("l_discount") / F.avg("l_extendedprice") * 100.0, 6
-                ).alias("discount_price_ratio_pct"),
-            )
-            .orderBy("l_linestatus")
+        payment = _stats_for(
+            stats, "l_linestatus", "total_trips", "avg_price",
+            F.round(F.col("__avg_discount") / F.col("avg_price") * 100.0, 6)
+            .alias("discount_price_ratio_pct"),
         )
         summary = vendor.agg(
             F.sum("total_trips").alias("total_total_trips"),
@@ -139,26 +200,20 @@ def run_pipeline(
             F.round(F.avg("avg_price"), 6).alias("mean_avg_price"),
         )
 
-        outputs: dict[str, str] = {}
-        sinks: list[tuple[str, DataFrame, str]] = [
-            ("processed", enhanced, "parquet"),
-            ("vendor_stats", vendor, "parquet"),
-            ("category_stats", category, "parquet"),
-            ("payment_stats", payment, "parquet"),
-            ("summary", summary, "csv"),
+        sinks: list[tuple[str, DataFrame, Callable]] = [
+            ("processed", enhanced, write_parquet),
+            ("vendor_stats", vendor, write_parquet),
+            ("category_stats", category, write_parquet),
+            ("payment_stats", payment, write_parquet),
+            ("summary", summary, write_csv),
         ]
-        for name, df, fmt in sinks:
-            path = f"{out_dir}/{name}"
-            with monitor.stage(f"sink:{name}"):
-                if fmt == "parquet":
-                    write_parquet(df, path)
-                else:
-                    write_csv(df, path)
-            outputs[name] = path
+        outputs = {name: f"{out_dir}/{name}" for name, _, _ in sinks}
 
-        with monitor.stage("clean_count") as crec:
-            clean_rows = enhanced.count()
-            crec.rows = clean_rows
+        def sink(name: str, df: DataFrame, write: Callable) -> None:
+            with monitor.stage(f"sink:{name}"):
+                write(df, outputs[name])
+
+        _run_concurrently(spark, *(partial(sink, *s) for s in sinks))
 
         return PipelineResult(
             schema_valid=True,
@@ -168,4 +223,4 @@ def run_pipeline(
             outputs=outputs,
         )
     finally:
-        enhanced.unpersist()
+        stats.unpersist()

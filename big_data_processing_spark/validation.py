@@ -32,17 +32,13 @@ ViolationRule = tuple[str, Column]
 
 
 def null_count_columns(columns: list[str]) -> list[Column]:
-    """One ``sum(isnull)`` per column — composable into one agg."""
-    return [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"null_{c}") for c in columns
-    ]
+    """One ``count_if(isnull)`` per column — composable into one agg
+    (a count, so an empty table reads 0, not NULL)."""
+    return [F.count_if(F.col(c).isNull()).alias(f"null_{c}") for c in columns]
 
 
 def violation_count_columns(rules: list[ViolationRule]) -> list[Column]:
-    return [
-        F.sum(F.when(pred, F.lit(1)).otherwise(F.lit(0))).alias(name)
-        for name, pred in rules
-    ]
+    return [F.count_if(pred).alias(name) for name, pred in rules]
 
 
 def quality_metrics(
@@ -83,11 +79,10 @@ def quality_metrics(
         total_violations = sum(
             (F.col(name) for name, _ in rules), start=F.lit(0)
         )
-        score = (
-            (F.col("total_rows") - total_violations)
-            / F.col("total_rows")
-            * F.lit(100.0)
-        )
+        # try_divide: an empty table scores 0.0, not DIVIDE_BY_ZERO
+        score = F.try_divide(
+            F.col("total_rows") - total_violations, F.col("total_rows")
+        ) * F.lit(100.0)
         metrics = metrics.withColumn(
             "quality_score",
             F.round(F.greatest(F.lit(0.0), score), 2),

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+
 from big_data_processing_spark.operators.cleaning import (
     iqr_bounds,
     iqr_filter,
@@ -55,6 +57,15 @@ def test_iqr_filter_drops_outlier(spark):
     out = sorted(r.x for r in iqr_filter(df, "x").collect())
     assert 1000.0 not in out
     assert len(out) == 20
+
+
+@pytest.mark.parametrize("exact", [True, False])
+def test_iqr_no_values_gives_null_fences(spark, exact):
+    # no non-NULL value: NULL quartiles, NULL fences, no row kept
+    df = spark.createDataFrame([(None,), (None,)], "x double")
+    for frame in (df, df.limit(0)):
+        assert iqr_bounds(frame, "x", exact=exact) == (None, None)
+        assert iqr_filter(frame, "x", exact=exact).count() == 0
 
 
 def test_iqr_approx_close_to_exact(spark):

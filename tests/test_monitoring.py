@@ -44,7 +44,10 @@ def test_pipeline_with_monitor(spark, tmp_path):
     assert "schema_gate" in names
     assert "quality_metrics" in names
     assert "sink:processed" in names
-    assert "clean_count" in names
+    assert "aggregates" in names
+    assert {n for n in names if n.startswith("sink:")} == {
+        f"sink:{s}" for s in result.outputs
+    }
     # the quality stage reported the raw row count
     qrec = next(r for r in mon.report() if r["name"] == "quality_metrics")
     assert qrec["rows"] == result.raw_rows

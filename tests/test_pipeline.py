@@ -1,6 +1,16 @@
 from __future__ import annotations
 
+import glob
+import os
+
+import duckdb
+import numpy as np
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
 from big_data_processing_spark.pipeline import run_pipeline
+from big_data_processing_spark.plans.parity_queries import CLEAN_WHERE
 from tests.conftest import SF0001
 
 
@@ -27,7 +37,153 @@ def test_pipeline_end_to_end(spark, tmp_path):
 
 
 def test_pipeline_schema_gate_fails_on_wrong_table(spark, tmp_path):
-    import pytest
-
     with pytest.raises(ValueError, match="schema gate"):
         run_pipeline(spark, SF0001, str(tmp_path / "x"), table="region")
+
+
+def _rows_in_file_order(path: str) -> list[tuple]:
+    """A parquet sink's rows, files in name order, rows in file order."""
+    rows: list[tuple] = []
+    for f in sorted(glob.glob(f"{path}/*.parquet")):
+        rows += [tuple(r.values()) for r in pq.read_table(f).to_pylist()]
+    return rows
+
+
+def _assert_rows_close(got: list[tuple], want: list[tuple], n_exact: int) -> None:
+    """First ``n_exact`` columns equal, the rest within rtol 1e-9."""
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g[:n_exact] == w[:n_exact], (g, w)
+        assert np.allclose(g[n_exact:], w[n_exact:], rtol=1e-9), (g, w)
+
+
+def test_pipeline_outputs_match_duckdb(spark, tmp_path):
+    """The grouped stats and the summary equal DuckDB's recomputation
+    over the written ``processed`` rows, each stats sink in key order."""
+    out = str(tmp_path / "out")
+    result = run_pipeline(spark, SF0001, out)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW p AS SELECT * FROM read_parquet('{out}/processed/*.parquet')"
+    )
+    assert con.execute("SELECT count(*) FROM p").fetchone()[0] == result.clean_rows
+
+    expected = {
+        "vendor_stats": """SELECT l_returnflag, count(*), sum(l_extendedprice),
+                   avg(l_quantity), avg(l_extendedprice)
+            FROM p GROUP BY 1 ORDER BY 1""",
+        "category_stats": """SELECT qty_category, count(*), avg(l_extendedprice),
+                   avg(price_per_unit)
+            FROM p GROUP BY 1 ORDER BY 1""",
+        "payment_stats": """SELECT l_linestatus, count(*), avg(l_extendedprice),
+                   round(avg(l_discount) / avg(l_extendedprice) * 100.0, 6)
+            FROM p GROUP BY 1 ORDER BY 1""",
+    }
+    for name, sql in expected.items():
+        got = _rows_in_file_order(result.outputs[name])
+        assert [g[0] for g in got] == sorted(g[0] for g in got), name
+        _assert_rows_close(got, con.execute(sql).fetchall(), n_exact=2)
+
+    want = con.execute("""
+        SELECT sum(n), round(sum(rev), 2), round(avg(qty), 6), round(avg(price), 6)
+        FROM (SELECT count(*) AS n, sum(l_extendedprice) AS rev,
+                     avg(l_quantity) AS qty, avg(l_extendedprice) AS price
+              FROM p GROUP BY l_returnflag)""").fetchall()
+    got = con.execute(
+        f"SELECT * FROM read_csv('{out}/summary/*.csv', header = true)"
+    ).fetchall()
+    _assert_rows_close(got, want, n_exact=1)
+
+
+def _duckdb_answer(path: str) -> tuple[dict, int]:
+    """DuckDB's quality counts and IQR-cleaned row count for one
+    lineitem file (NULL fences keep no rows)."""
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{path}')")
+    quality = con.execute("""
+        SELECT count(*),
+               count(*) FILTER (WHERE l_extendedprice > 100000),
+               count(*) FILTER (WHERE l_quantity >= 50),
+               count(*) FILTER (WHERE l_discount > 0.08)
+        FROM lineitem""").fetchone()
+    clean = con.execute(f"""
+        WITH f AS (
+          SELECT q[1] - 1.5 * (q[2] - q[1]) AS lo, q[2] + 1.5 * (q[2] - q[1]) AS hi
+          FROM (SELECT quantile_cont(l_extendedprice, [0.25, 0.75]) AS q
+                FROM lineitem WHERE {CLEAN_WHERE}))
+        SELECT count(*) FROM lineitem, f
+        WHERE {CLEAN_WHERE} AND l_extendedprice BETWEEN lo AND hi""").fetchone()[0]
+    names = ("total_rows", "invalid_price", "invalid_qty", "invalid_discount")
+    return dict(zip(names, quality)), clean
+
+
+@pytest.mark.parametrize("case", ["empty", "all_fail_range_clean"])
+def test_pipeline_degenerate_input(spark, tmp_path, case):
+    """No row survives cleaning: NULL IQR fences keep nothing, every
+    aggregate sink is empty and the summary row holds NULL totals."""
+    table = pq.read_table(f"{SF0001}/lineitem.parquet")
+    if case == "empty":
+        table = table.slice(0, 0)
+    else:
+        table = table.slice(0, 50)
+        qty = table.schema.get_field_index("l_quantity")
+        table = table.set_column(
+            qty, "l_quantity", pc.add(table["l_quantity"], 100.0)
+        )
+    data = tmp_path / "data"
+    os.makedirs(data)
+    pq.write_table(table, str(data / "lineitem.parquet"))
+    quality, clean_rows = _duckdb_answer(str(data / "lineitem.parquet"))
+    assert clean_rows == 0
+
+    result = run_pipeline(spark, str(data), str(tmp_path / "out"))
+    assert {k: int(result.quality[k]) for k in quality} == quality
+    assert result.raw_rows == table.num_rows
+    assert result.clean_rows == 0
+    for name in ("processed", "vendor_stats", "category_stats", "payment_stats"):
+        assert spark.read.parquet(result.outputs[name]).count() == 0, name
+    summary = spark.read.option("header", True).csv(result.outputs["summary"])
+    rows = summary.collect()
+    assert len(rows) == 1
+    assert all(v is None for v in rows[0])
+
+
+def _jobs_since(sc, last_job: int) -> list[tuple[int, str | None]]:
+    """(job id, job group) of every job after ``last_job``."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobId() > last_job:
+            group = job.jobGroup()
+            out.append((job.jobId(), group.get() if group.isDefined() else None))
+    return out
+
+
+def test_pipeline_jobs_stay_in_caller_group_and_failure_cleans_up(spark, tmp_path):
+    """Jobs submitted from the pipeline's threads inherit the caller's
+    job group; a failing sink raises, leaves no cached RDD behind and
+    the next run succeeds."""
+    sc = spark.sparkContext
+    last_job = max((j for j, _ in _jobs_since(sc, -1)), default=-1)
+    persistent = set(sc._jsc.getPersistentRDDs().keySet())
+    sc.setJobGroup("etl", "run_pipeline job-group check")
+    try:
+        run_pipeline(spark, SF0001, str(tmp_path / "out"))
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    jobs = _jobs_since(sc, last_job)
+    assert jobs
+    assert [j for j, g in jobs if g != "etl"] == []
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persistent
+
+    blocker = tmp_path / "a_file"
+    blocker.write_text("not a directory")
+    with pytest.raises(Exception):
+        run_pipeline(spark, SF0001, str(blocker / "out"))
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persistent
+
+    result = run_pipeline(spark, SF0001, str(tmp_path / "out2"))
+    assert result.clean_rows > 0
