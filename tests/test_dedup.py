@@ -12,6 +12,7 @@ from big_data_processing_spark.functions.dedup import (
     simhash64_table,
     simhash_near_duplicates,
 )
+from tests.conftest import SF0001
 
 DOC_A = "the quick brown fox jumps over the lazy dog again and again today"
 DOC_A2 = "the quick brown fox jumps over the lazy dog again and again tonight"
@@ -427,13 +428,20 @@ def test_novelty_filter_drops_known_fingerprints(spark):
 
 
 def test_md5_signatures_per_row_matches_vocab_groupby(spark):
-    """Pin the zero-shuffle per-row md5 signature build bit-identical
-    to the reference explode -> distinct -> per-vocab md5 -> join ->
-    groupBy-min formulation it replaced (md5 is deterministic per
-    (perm, gram); min-over-array == min-over-group on a gram set)."""
+    """Pin the zero-shuffle per-row signature build bit-identical to
+    the reference explode -> distinct -> per-vocab permutation -> join
+    -> groupBy-min formulation (each permutation is deterministic per
+    gram; min-over-array == min-over-group on a gram set), on the md5
+    basis (``md5_minhash_signatures``) and on the xxhash64 basis
+    (``minhash_signatures``)."""
+    from big_data_processing_spark.functions import dedup
     from big_data_processing_spark.functions.dedup import (
         md5_gram_sets,
         md5_minhash_signatures,
+    )
+    from big_data_processing_spark.functions.text import (
+        char_ngram_hashes_of_norm,
+        normalize_text,
     )
 
     df = spark.createDataFrame(
@@ -446,32 +454,66 @@ def test_md5_signatures_per_row_matches_vocab_groupby(spark):
         ],
         "doc_id long, text string",
     )
-    grams = md5_gram_sets(df, "text", "doc_id", shingle_n=5)
-    fast = {
-        r.doc_id: tuple(r[f"m{i}"] for i in range(8))
-        for r in md5_minhash_signatures(grams, "doc_id", num_perm=8)
-        .collect()
-    }
-    exploded = grams.select("doc_id", F.explode("grams").alias("g"))
-    vocab = exploded.select("g").distinct().select(
-        "g",
-        *[
-            F.md5(F.concat_ws(":", F.lit(str(i)), F.col("g"))).alias(
-                f"h{i}"
-            )
-            for i in range(8)
-        ],
+
+    def md5_perm(i, g):
+        return F.md5(F.concat_ws(":", F.lit(str(i)), g))
+
+    def affine_perm(i, g):
+        m = dedup._MERSENNE
+        return (F.pmod(g, F.lit(m)) * dedup._A[i] + dedup._B[i]) % m
+
+    md5_grams = md5_gram_sets(df, "text", "doc_id", shingle_n=5)
+    hashed_grams = df.select(
+        "doc_id",
+        char_ngram_hashes_of_norm(normalize_text(F.col("text")), 5).alias("grams"),
+    ).filter(F.size("grams") > 0)
+    cases = [
+        (md5_minhash_signatures(md5_grams, "doc_id", num_perm=8), md5_grams, md5_perm),
+        (minhash_signatures(df, "text", "doc_id", num_perm=8), hashed_grams, affine_perm),
+    ]
+    for sig, grams, perm in cases:
+        fast = {r.doc_id: tuple(r[f"m{i}"] for i in range(8)) for r in sig.collect()}
+        exploded = grams.select("doc_id", F.explode("grams").alias("g"))
+        vocab = exploded.select("g").distinct().select(
+            "g", *[perm(i, F.col("g")).alias(f"h{i}") for i in range(8)]
+        )
+        ref = {
+            r.doc_id: tuple(r[f"m{i}"] for i in range(8))
+            for r in exploded.join(vocab, "g")
+            .groupBy("doc_id")
+            .agg(*[F.min(f"h{i}").alias(f"m{i}") for i in range(8)])
+            .collect()
+        }
+        assert fast == ref
+        # docs without shingles are dropped before signing
+        assert set(fast) == {1, 2, 3}
+
+
+@pytest.mark.parametrize("basis", ["xxhash64", "md5"])
+def test_signature_plan_size_independent_of_num_perm(spark, basis):
+    """The signature is one array expression: its projection holds the
+    same number of lambdas for 8 and 32 permutations (one
+    ``array_min(transform(...))`` column per permutation made the plan,
+    and its driver-side planning time, grow with ``num_perm``)."""
+    from big_data_processing_spark.functions.dedup import (
+        md5_gram_sets,
+        md5_minhash_signatures,
     )
-    ref = {
-        r.doc_id: tuple(r[f"m{i}"] for i in range(8))
-        for r in exploded.join(vocab, "g")
-        .groupBy("doc_id")
-        .agg(*[F.min(f"h{i}").alias(f"m{i}") for i in range(8)])
-        .collect()
-    }
-    assert fast == ref
-    # the length(nrm) >= n pre-filter drops exactly the no-shingle docs
-    assert set(fast) == {1, 2, 3}
+    from big_data_processing_spark.sources.catalog import load_table
+
+    docs = load_table(spark, SF0001, "documents")
+
+    def lambdas(num_perm: int) -> int:
+        if basis == "md5":
+            grams = md5_gram_sets(docs, "text", "doc_id", shingle_n=5)
+            sig = md5_minhash_signatures(grams, "doc_id", num_perm=num_perm)
+        else:
+            sig = minhash_signatures(docs, "text", "doc_id", num_perm=num_perm)
+        assert len(sig.columns) == num_perm + 1
+        plan = sig._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("lambdafunction")
+
+    assert lambdas(8) == lambdas(32) > 0
 
 
 def test_quadratic_guard_warns_past_ceiling(spark):

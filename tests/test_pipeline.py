@@ -11,7 +11,7 @@ import pytest
 
 from big_data_processing_spark.pipeline import run_pipeline
 from big_data_processing_spark.plans.parity_queries import CLEAN_WHERE
-from tests.conftest import SF0001
+from tests.conftest import SF0001, jobs_since
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -148,33 +148,19 @@ def test_pipeline_degenerate_input(spark, tmp_path, case):
     assert all(v is None for v in rows[0])
 
 
-def _jobs_since(sc, last_job: int) -> list[tuple[int, str | None]]:
-    """(job id, job group) of every job after ``last_job``."""
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    jobs = jsc.statusStore().jobsList(None)
-    out = []
-    for i in range(jobs.size()):
-        job = jobs.apply(i)
-        if job.jobId() > last_job:
-            group = job.jobGroup()
-            out.append((job.jobId(), group.get() if group.isDefined() else None))
-    return out
-
-
 def test_pipeline_jobs_stay_in_caller_group_and_failure_cleans_up(spark, tmp_path):
     """Jobs submitted from the pipeline's threads inherit the caller's
     job group; a failing sink raises, leaves no cached RDD behind and
     the next run succeeds."""
     sc = spark.sparkContext
-    last_job = max((j for j, _ in _jobs_since(sc, -1)), default=-1)
+    last_job = max((j for j, _ in jobs_since(sc, -1)), default=-1)
     persistent = set(sc._jsc.getPersistentRDDs().keySet())
     sc.setJobGroup("etl", "run_pipeline job-group check")
     try:
         run_pipeline(spark, SF0001, str(tmp_path / "out"))
     finally:
         sc._jsc.sc().clearJobGroup()
-    jobs = _jobs_since(sc, last_job)
+    jobs = jobs_since(sc, last_job)
     assert jobs
     assert [j for j, g in jobs if g != "etl"] == []
     assert set(sc._jsc.getPersistentRDDs().keySet()) == persistent

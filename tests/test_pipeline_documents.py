@@ -1,9 +1,25 @@
 from __future__ import annotations
 
+import glob
+import os
+
+import duckdb
+import pytest
+from pyspark.sql import functions as F
+
+from big_data_processing_spark.functions.dedup import (
+    dedup_by_fingerprint,
+    minhash_near_duplicates,
+)
+from big_data_processing_spark.functions.text import lang_id, quality_score, token_count
 from big_data_processing_spark.pipeline_documents import (
     run_document_pipeline,
 )
-from tests.conftest import SF0001
+from big_data_processing_spark.sources.catalog import load_table
+from big_data_processing_spark.sources.files import write_parquet
+from tests.conftest import SF0001, jobs_since
+
+LANGS = ("en", "de", "fr", "es")
 
 
 def test_document_pipeline_end_to_end(spark, tmp_path):
@@ -29,7 +45,109 @@ def test_document_pipeline_end_to_end(spark, tmp_path):
     assert out.filter("quality < 0.3").count() == 0
     # exact dedup: no two rows share a normalized-text fingerprint
     from big_data_processing_spark.functions.text import md5_fingerprint
-    from pyspark.sql import functions as F
 
     fps = out.select(md5_fingerprint(F.col("text")).alias("fp"))
     assert fps.count() == fps.distinct().count()
+
+
+def _chain(spark, sf_dir, out_dir):
+    """The pipeline's stages spelled out with a plain ``count()`` per
+    stage: the same operators and defaults, its own corpus write."""
+    docs = load_table(spark, sf_dir, "documents")
+    scored = docs.select(
+        "doc_id", "text", "lang", "source",
+        token_count(F.col("text")).alias("n_tokens"),
+        quality_score(F.col("text")).alias("quality"),
+        lang_id(F.col("text")).alias("lang_pred"),
+    )
+    quality_ok = scored.filter((F.col("quality") >= 0.3) & (F.col("n_tokens") >= 5))
+    lang_ok = quality_ok.filter(F.col("lang_pred").isin(*LANGS))
+    keepers = dedup_by_fingerprint(lang_ok, "text", "doc_id").select("doc_id")
+    exact = lang_ok.join(keepers, on="doc_id")
+    pairs = minhash_near_duplicates(exact, "text", "doc_id", threshold=0.6)
+    drop_ids = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    near = exact.join(drop_ids, on="doc_id", how="left_anti")
+    sampled = near.sampleBy("lang_pred", {lang: 0.5 for lang in LANGS}, seed=42)
+    out_path = os.path.join(out_dir, "corpus")
+    write_parquet(sampled, out_path, partition_by=["lang_pred"])
+    counts = {
+        "raw_docs": docs.count(),
+        "after_quality": quality_ok.count(),
+        "after_lang": lang_ok.count(),
+        "after_exact_dedup": exact.count(),
+        "after_near_dedup": near.count(),
+    }
+    return counts, out_path
+
+
+def _written(out_path: str) -> list[tuple]:
+    """(doc_id, lang_pred) of the written corpus, read by DuckDB."""
+    if not glob.glob(os.path.join(out_path, "**", "*.parquet"), recursive=True):
+        return []
+    return duckdb.sql(
+        f"select doc_id, lang_pred from read_parquet('{out_path}/**/*.parquet', "
+        "hive_partitioning = true) order by doc_id"
+    ).fetchall()
+
+
+def test_observed_counts_match_counted_chain(spark, tmp_path, monkeypatch):
+    """Every stage count observed on the write equals a plain count()
+    of that stage, ``sampled`` is what DuckDB reads back, and the
+    written rows are the ones a count-per-stage chain writes. The
+    observed nodes must not keep Catalyst from pushing the near-dup
+    anti join below the exact-dedup join, as it does in the chain:
+    ``sampleBy`` draws by row order, so the plan below it matters."""
+    import big_data_processing_spark.pipeline_documents as pipeline
+
+    written_frames = []
+
+    def capture(df, path, **kwargs):
+        written_frames.append(df)
+        write_parquet(df, path, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_parquet", capture)
+    res = run_document_pipeline(spark, SF0001, str(tmp_path / "new"))
+    plan = written_frames[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.index("Join LeftAnti") > plan.index("Join Inner"), plan
+    counts, chain_path = _chain(spark, SF0001, str(tmp_path / "chain"))
+    written = _written(res.out_path)
+
+    assert {k: getattr(res, k) for k in counts} == counts
+    assert res.sampled == len(written) > 0
+    assert written == _written(chain_path)
+
+
+@pytest.mark.parametrize(
+    "kwargs, empty_from",
+    [
+        ({"keep_langs": ("xx",)}, "after_lang"),
+        ({"near_dup_threshold": 1.01}, None),
+        ({"sample_fraction": 0.0}, "sampled"),
+    ],
+    ids=["no_kept_language", "no_near_dup_pairs", "zero_sample"],
+)
+def test_degenerate_inputs(spark, tmp_path, kwargs, empty_from):
+    """A stage that keeps nothing reads 0 from there on and leaves an
+    empty corpus; zero near-dup pairs remove nothing."""
+    res = run_document_pipeline(spark, SF0001, str(tmp_path), **kwargs)
+    fields = ["raw_docs", "after_quality", "after_lang", "after_exact_dedup",
+              "after_near_dedup", "sampled"]
+    got = [getattr(res, f) for f in fields]
+    empty = fields.index(empty_from) if empty_from else len(fields)
+    assert all(n > 0 for n in got[:empty]), got
+    assert all(n == 0 for n in got[empty:]), got
+    assert res.sampled == len(_written(res.out_path))
+    if empty_from is None:
+        assert res.after_near_dedup == res.after_exact_dedup
+
+
+def test_document_pipeline_job_count(spark, tmp_path):
+    """The call submits the jobs of two passes over the data (the
+    MinHash shingle pin and the write) plus the near-dup operator's
+    vocabulary collect and bitmap pin: 27 on SF0001 with 4 shuffle
+    partitions, at any core count. A per-stage count() or a read-back
+    of the corpus adds jobs (47 with both)."""
+    sc = spark.sparkContext
+    last_job = max((j for j, _ in jobs_since(sc, -1)), default=-1)
+    run_document_pipeline(spark, SF0001, str(tmp_path))
+    assert len(jobs_since(sc, last_job)) <= 27
