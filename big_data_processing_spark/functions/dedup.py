@@ -50,6 +50,13 @@ hash they pass in.
   verify: ``hash64_near_dup_pairs`` (pigeonhole layout from
   ``max_hamming``) and ``simhash_near_duplicates_md5`` (4 × 8 bits).
 
+The Column expressions of the MinHash path that depend only on plain
+values (signature, band buckets, the Jaccard filter, the verifier's
+intersection, the normalize and shingle projections, the exact-dedup
+fingerprint and the vocabulary estimate) come from
+``session.column_cache`` builders, because rebuilding them costs
+about one py4j round trip per expression node on every call.
+
 Scale notes
 -----------
 - Exact dedup is a hash shuffle on the dedup key — at 100 TB,
@@ -81,6 +88,7 @@ from big_data_processing_spark.functions.text import (
     tokens,
     winnow_of_hashes,
 )
+from big_data_processing_spark.session import column_cache
 
 # Mersenne prime 2^31 - 1: modular universal-hash family for MinHash.
 _MERSENNE = (1 << 31) - 1
@@ -95,6 +103,10 @@ _B = [(i * i * 7919 + 13) % _MERSENNE for i in range(1, 129)]
 #: candidate pair, still well under the hash-set cost of
 #: ``array_intersect`` on typical (hundreds-long) gram arrays.
 _BITMAP_VOCAB_CAP = 4096
+#: A vocabulary estimate above this multiple of the cap picks the
+#: array verifier without the exact statistic: twice the cap is 20
+#: standard deviations of the HyperLogLog++ estimate away.
+_VOCAB_ESTIMATE_MARGIN = 2
 
 
 def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
@@ -141,11 +153,17 @@ def dedup_by_fingerprint(
     """Keep one representative (min id) per md5-normalized-text
     fingerprint. Shuffles the 32-hex-char fingerprint, not the
     document text — the 100 TB-friendly exact dedup."""
-    fp = md5_fingerprint(F.col(text_col)).alias("fingerprint")
+    fp, first, copies = _fingerprint_columns(text_col, id_col)
+    return df.select(F.col(id_col), fp).groupBy("fingerprint").agg(first, copies)
+
+
+@column_cache
+def _fingerprint_columns(text_col: str, id_col: str) -> tuple[Column, ...]:
+    """The fingerprint projection and the per-fingerprint aggregates."""
     return (
-        df.select(F.col(id_col), fp)
-        .groupBy("fingerprint")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies"))
+        md5_fingerprint(F.col(text_col)).alias("fingerprint"),
+        F.min(id_col).alias(id_col),
+        F.count(F.lit(1)).alias("n_copies"),
     )
 
 
@@ -161,8 +179,18 @@ def _normalized(
     cores, text normalized once per row."""
     keep = [id_col, *block_cols]
     return partitioning.spread(df.select(*keep, text_col), id_col).select(
-        *keep, normalize_text(F.col(text_col)).alias("nrm")
+        *keep, _nrm(text_col)
     )
+
+
+@column_cache
+def _nrm(text_col: str) -> Column:
+    return normalize_text(F.col(text_col)).alias("nrm")
+
+
+@column_cache
+def _grams(shingle, n: int) -> Column:
+    return shingle(F.col("nrm"), n).alias("grams")
 
 
 def _shingle_base(
@@ -193,9 +221,7 @@ def _shingle_base(
     nrm = _normalized(df, text_col, id_col, block_cols)
     if drop_empty:
         nrm = nrm.filter(F.length("nrm") >= n)
-    return nrm.select(
-        id_col, *block_cols, shingle(F.col("nrm"), n).alias("grams")
-    )
+    return nrm.select(id_col, *block_cols, _grams(shingle, n))
 
 
 def _exploded(base: DataFrame, id_col: str, block_cols) -> DataFrame:
@@ -343,15 +369,18 @@ def _jaccard_filter(pairs: DataFrame, threshold: float) -> DataFrame:
     sz_a, sz_b) over distinct-gram sets: |A ∪ B| = |A| + |B| − |A ∩ B|
     exactly, so no union set is ever built. Rounded to 6 digits, the
     cross-engine parity grid."""
+    jaccard, keep = _jaccard(threshold)
+    return pairs.select("id_a", "id_b", jaccard).filter(keep)
+
+
+@column_cache
+def _jaccard(threshold: float) -> tuple[Column, Column]:
+    """The rounded ``jaccard`` column and its threshold predicate."""
     union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
     jac = F.when(
         union > 0, F.col("inter").cast("double") / union
     ).otherwise(F.lit(0.0))
-    return (
-        pairs.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return F.round(jac, 6).alias("jaccard"), F.col("jaccard") >= threshold
 
 
 def _verify_jaccard_candidates(
@@ -388,48 +417,47 @@ def _verify_jaccard_candidates(
       sampler scan cached pair rows instead. Pass ``False`` when the
       caller re-materializes the pairs itself (the cluster builder
       pins its symmetrized edge list) — a second pin is overhead."""
-    if bits is None:
-        sides = base.select(
-            F.col(id_col), F.size("grams").alias("__n"),
-            F.col("grams").alias("__g"),
-        )
-
-        def inter(a, b):
-            return F.size(F.array_intersect(a, b))
-    else:
-        sides = bits.select(
-            F.col(id_col), F.col("__sz").alias("__n"),
-            F.col("__bits").alias("__g"),
-        )
-
-        def inter(a, b):
-            return F.aggregate(
-                F.zip_with(
-                    a, b,
-                    lambda x, y: F.bit_count(x.bitwiseAND(y)).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, c: acc + c,
-            )
-
-    def side(s: str) -> DataFrame:
-        return sides.select(
-            F.col(id_col).alias(f"id_{s}"),
-            F.col("__n").alias(f"sz_{s}"),
-            F.col("__g").alias(f"__g{s}"),
-        )
-
+    frame = base if bits is None else bits
+    sides = _verify_sides(id_col, bits is not None)
     verified = (
         partitioning.spread_even(cand)
-        .join(side("a"), on="id_a")
-        .join(side("b"), on="id_b")
-        .select(
-            "id_a", "id_b", inter("__ga", "__gb").alias("inter"),
-            "sz_a", "sz_b",
-        )
+        .join(frame.select(*sides[0]), on="id_a")
+        .join(frame.select(*sides[1]), on="id_b")
+        .select("id_a", "id_b", _intersection(bits is not None), "sz_a", "sz_b")
     )
     out = _jaccard_filter(verified, threshold)
     return out.localCheckpoint(eager=False) if pin_result else out
+
+
+@column_cache
+def _verify_sides(id_col: str, bitmaps: bool) -> tuple[tuple[Column, ...], ...]:
+    """The (id, size, set) projections of the two verify-join sides,
+    from gram arrays or from a :func:`_gram_bitmaps` frame."""
+    size, grams = (
+        (F.col("__sz"), F.col("__bits")) if bitmaps
+        else (F.size("grams"), F.col("grams"))
+    )
+    return tuple(
+        (F.col(id_col).alias(f"id_{s}"), size.alias(f"sz_{s}"),
+         grams.alias(f"__g{s}"))
+        for s in "ab"
+    )
+
+
+@column_cache
+def _intersection(bitmaps: bool) -> Column:
+    """``inter`` = |A ∩ B| of the two sides' sets: summed popcount of
+    the pairwise AND for bitmaps, ``array_intersect`` for arrays."""
+    a, b = F.col("__ga"), F.col("__gb")
+    if not bitmaps:
+        return F.size(F.array_intersect(a, b)).alias("inter")
+    return F.aggregate(
+        F.zip_with(
+            a, b, lambda x, y: F.bit_count(x.bitwiseAND(y)).cast("long")
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, c: acc + c,
+    ).alias("inter")
 
 
 # ---------------------------------------------------------------------------
@@ -447,6 +475,7 @@ def _min_over_grams(perm) -> Column:
     return F.array_min(F.transform(F.col("grams"), perm))
 
 
+@column_cache
 def _affine_sig(num_perm: int) -> Column:
     """Signature on the xxhash64 basis: component i is the min over
     the row's 64-bit gram hashes of ``(a_i·h + b_i) mod p`` (Mersenne
@@ -461,6 +490,7 @@ def _affine_sig(num_perm: int) -> Column:
     )
 
 
+@column_cache
 def _md5_sig(num_perm: int) -> Column:
     """Signature on the md5 basis: component i is the lexicographic
     min of ``md5('i:' || gram)`` over the row's string grams — md5 is
@@ -514,21 +544,12 @@ def _lsh_candidates(
     ``num_perm`` scalar columns (0.14 s vs 0.19 s per call for 8
     bands of 4, same measurement as :func:`_signatures`). Only ids
     and bucket hashes shuffle."""
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            bucket_hash(F.concat_ws(
-                ",", F.slice("sig", b * rows + 1, rows).cast("array<string>")
-            )).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
     # no pin: both self-join sides re-derive this from the caller's
     # PINNED gram table — a cheap projection, and the two runs overlap
     # as concurrent jobs, whereas a pin here is one more serial action
-    banded = sig.select(
-        id_col, F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
+    banded = sig.select(id_col, _band_buckets(bands, rows, bucket_hash)).select(
+        id_col, "bb.band", "bb.bucket"
+    )
     return (
         banded.alias("a")
         .join(banded.alias("b"), on=["band", "bucket"])
@@ -539,6 +560,20 @@ def _lsh_candidates(
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
+
+
+@column_cache
+def _band_buckets(bands: int, rows: int, bucket_hash) -> Column:
+    """``bb``: one (band, bucket) struct per band, exploded."""
+    return F.explode(F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            bucket_hash(F.concat_ws(
+                ",", F.slice("sig", b * rows + 1, rows).cast("array<string>")
+            )).alias("bucket"),
+        )
+        for b in range(bands)
+    ])).alias("bb")
 
 
 def minhash_signatures(
@@ -597,7 +632,9 @@ def minhash_near_duplicates(
     Without ``bits``, verification dispatches on the corpus
     vocabulary (:func:`_gram_bitmaps`): bitmaps when it fits
     ``_BITMAP_VOCAB_CAP``, the gram arrays otherwise — identical
-    values either way.
+    values either way. The shingle pin's own job estimates the
+    vocabulary first; above ``_VOCAB_ESTIMATE_MARGIN`` times the cap
+    the arrays are picked without the exact statistic.
 
     ``pin_result`` (default on) ends the pipeline with a lazy
     ``localCheckpoint`` of the verified pairs (see
@@ -613,29 +650,52 @@ def minhash_near_duplicates(
         # pinned now: projection collapse would otherwise inline this
         # array into each of the num_perm signature transforms —
         # xxhash64 + array_distinct re-evaluated per permutation
-        shingled = partitioning.pin_now(grams.select(
+        base = grams.select(
             F.col(id_col),
             F.array_distinct(
                 F.transform(F.col("grams"), lambda g: F.xxhash64(g))
             ).alias("grams"),
-        ))
-    else:
-        shingled = partitioning.pin_now(
-            _shingle_base(df, text_col, id_col, shingle_n)
         )
+    else:
+        base = _shingle_base(df, text_col, id_col, shingle_n)
+    if bits is not None:
+        shingled = partitioning.pin_now(base)
+    else:
+        # the pin's own job estimates the vocabulary. Far above the
+        # cap the exact statistic could only pick arrays, so its gram
+        # table checkpoint and collect (3 jobs) are skipped; a wrong
+        # estimate costs time, never values
+        shingled, vocab = partitioning.pin_now(base, summary=_vocab_estimate)
+        if vocab[0] <= _VOCAB_ESTIMATE_MARGIN * _BITMAP_VOCAB_CAP:
+            bits = _gram_bitmaps(shingled, id_col)
     # empty docs are dropped from the PINNED frame, where the filter
     # stays put: drop_empty's length predicate is pushed below the
     # spread into the caller's unpinned upstream plan, measured at
     # +0.4 s per run_document_pipeline op (500 documents, 4 cores)
     sig = _signatures(
-        shingled.filter(F.size("grams") > 0), id_col, num_perm, _affine_sig
+        shingled.filter(_has_grams()), id_col, num_perm, _affine_sig
     )
     cand = _lsh_candidates(sig, id_col, bands, num_perm // bands, F.xxhash64)
-    if bits is None:
-        bits = _gram_bitmaps(shingled, id_col)
     return _verify_jaccard_candidates(
         shingled, cand, id_col, threshold, pin_result=pin_result, bits=bits
     )
+
+
+def _vocab_estimate(base: DataFrame) -> DataFrame:
+    """One row: the HyperLogLog++ estimate of ``base``'s distinct
+    grams (default 5% relative standard deviation)."""
+    grams, estimate = _vocab_columns()
+    return base.select(grams).agg(estimate)
+
+
+@column_cache
+def _vocab_columns() -> tuple[Column, Column]:
+    return F.explode("grams").alias("g"), F.approx_count_distinct("g")
+
+
+@column_cache
+def _has_grams() -> Column:
+    return F.size("grams") > 0
 
 
 def md5_gram_sets(

@@ -12,10 +12,14 @@ core of a 1000-core cluster.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 
 
-def pin_now(df: DataFrame) -> DataFrame:
+def pin_now(
+    df: DataFrame, summary: Callable[[DataFrame], DataFrame] | None = None
+):
     """Materialize ``df`` NOW as a local checkpoint and return the
     pinned frame — the safe spelling of ``localCheckpoint(eager=True)``.
 
@@ -31,8 +35,15 @@ def pin_now(df: DataFrame) -> DataFrame:
     the blocks it just wrote) — while the materializing execution
     keeps whole-stage codegen + AQE. Use this anywhere a frame is
     referenced by concurrently-launched consumer jobs (broadcast
-    sides race a purely lazy pin and rebuild the frame per side)."""
+    sides race a purely lazy pin and rebuild the frame per side).
+
+    ``summary`` (pinned frame → one-row frame) replaces the ``count()``
+    as the materializing action, so a statistic of the pinned rows
+    costs no job of its own; ``(pinned frame, summary row)`` is then
+    returned."""
     out = df.localCheckpoint(eager=False)
+    if summary is not None:
+        return out, summary(out).first()
     out.count()
     return out
 

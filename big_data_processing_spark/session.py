@@ -21,8 +21,10 @@ Scale notes
 
 from __future__ import annotations
 
+import functools
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "big-data-processing-spark"
@@ -85,3 +87,26 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def column_cache(builder):
+    """Memoize ``builder``, a function of plain hashable values that
+    returns Column expressions, for the life of the gateway JVM.
+
+    A Column is an unresolved expression tree held by the JVM, so one
+    built object serves every DataFrame and every session of that JVM
+    (``spark.stop()`` keeps the gateway), while building it again
+    costs about one py4j round trip per expression node. The memo is
+    dropped when the gateway is replaced: Column handles of a stopped
+    JVM are dead."""
+    cached = functools.lru_cache(maxsize=64)(builder)
+    owner = [SparkContext._gateway]
+
+    @functools.wraps(builder)
+    def wrapper(*args):
+        if SparkContext._gateway is not owner[0]:
+            cached.cache_clear()
+            owner[0] = SparkContext._gateway
+        return cached(*args)
+
+    return wrapper
