@@ -53,6 +53,24 @@ def range_filter(df: DataFrame, rules: list[RangeRule]) -> DataFrame:
     return df.filter(range_predicate(rules))
 
 
+# The ETL's F1 rules on lineitem (`spark_processor.py:110-118` shape),
+# as range rules and as the equivalent SQL predicate.
+CLEAN_RULES = [
+    ("l_extendedprice", 0.0, 100000.0, False, False),  # 0 < price < 100000
+    ("l_quantity", 0.0, 50.0, False, False),  # 0 < qty < 50
+    ("l_discount", 0.0, 0.08, True, True),  # 0 <= disc <= 0.08
+]
+CLEAN_WHERE = (
+    "l_extendedprice > 0 AND l_extendedprice < 100000 "
+    "AND l_quantity > 0 AND l_quantity < 50 "
+    "AND l_discount >= 0 AND l_discount <= 0.08"
+)
+
+
+def clean(df: DataFrame) -> DataFrame:
+    return range_filter(df, CLEAN_RULES)
+
+
 def exact_percentile_values(
     df: DataFrame,
     column: str,

@@ -59,6 +59,29 @@ def guarded_ratio(
     )
 
 
+# The ETL's P1 buckets on lineitem: left-closed when-ladder
+# (`spark_processor.py:185-189` shape), and the equivalent SQL CASE.
+QTY_BUCKETS = [("short", 10.0), ("medium", 25.0), ("long", 40.0)]
+QTY_DEFAULT = "very_long"
+QTY_BUCKET_CASE = (
+    "CASE WHEN l_quantity < 10 THEN 'short' "
+    "WHEN l_quantity < 25 THEN 'medium' "
+    "WHEN l_quantity < 40 THEN 'long' "
+    "ELSE 'very_long' END"
+)
+
+
+def enrich(df: DataFrame) -> DataFrame:
+    """P1 + P2 + P3 on the cleaned lineitem table
+    (spark_processor.py:180-198 shape)."""
+    df = bucketize(df, "l_quantity", QTY_BUCKETS, QTY_DEFAULT, "qty_category")
+    df = guarded_ratio(df, "l_extendedprice", "l_quantity", "price_per_unit")
+    df = guarded_ratio(
+        df, "l_discount", "l_extendedprice", "discount_pct", scale=100.0
+    )
+    return df
+
+
 def sink_projection(
     df: DataFrame, columns: list[tuple[str, str, str | None]]
 ) -> DataFrame:

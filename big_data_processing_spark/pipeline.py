@@ -3,9 +3,9 @@ reference's orchestrator (`/root/reference/src/main.py:88-309`).
 
 Stages (same DAG, Spark-first execution):
   scan → schema gate → {single-pass quality metrics ‖ F1 range clean
-  → F2 IQR fences} → P1-P3 enrichment → ONE grouping-sets aggregate
-  (A1 vendor / A2 category / A3 payment) → {processed ‖ vendor ‖
-  category ‖ payment ‖ A10 summary} parquet + CSV sinks.
+  → F2 IQR fences → P1-P3 enrichment → {processed sink ‖ ONE
+  grouping-sets aggregate (A1 vendor / A2 category / A3 payment) →
+  {vendor ‖ category ‖ payment ‖ A10 summary} sinks}}, parquet + CSV.
 
 Differences from the reference, by design:
 - Validation is one aggregation pass, not ~2+2·ncols jobs
@@ -30,17 +30,31 @@ Scale notes
   holds one row per key value, so it is cached and collected once;
   each stats sink is a filter over it, sorted in one partition, and
   ``clean_rows`` is the sum of the vendor rows' counts.
-- Independent actions are submitted together from a thread pool, so
-  Spark schedules their tasks side by side instead of leaving cores
-  idle behind one-task stages: the quality pass with the IQR fence
-  job, then all five sinks. Each thread inherits the caller's local
-  properties, so every job stays in the caller's job group (and is
-  cancelled with it).
+
+Scheduling
+----------
+Each action is submitted to one thread pool as soon as its inputs
+exist, so Spark runs the tasks of independent jobs side by side
+instead of leaving cores idle behind one-task stages::
+
+    quality pass ─────────────────────────────────────────┐
+    IQR fences ─┬─ processed sink ────────────────────────┤
+                └─ stats collect ─┬─ vendor / category /  ├─ result
+                                  └─ payment / summary ───┘
+
+The fences are the only gate: nothing waits for the quality pass,
+whose result is read only to build ``PipelineResult``. The stats
+sinks wait for the collect because they read its cache; started
+earlier, each would re-run the cache's shared stage. Every pool
+thread inherits the caller's local properties, so every job stays
+in the caller's job group (and is cancelled with it), and every
+action ends before the first failure is re-raised and the cache is
+released.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
 from typing import Any, Callable
@@ -50,12 +64,12 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from big_data_processing_spark.monitoring import PipelineMonitor
-from big_data_processing_spark.operators.cleaning import iqr_filter
-from big_data_processing_spark.plans.parity_queries import (
+from big_data_processing_spark.operators.cleaning import (
     CLEAN_RULES,
     clean,
-    enrich,
+    iqr_filter,
 )
+from big_data_processing_spark.operators.enrichment import enrich
 from big_data_processing_spark.sources.catalog import load_table
 from big_data_processing_spark.sources.files import write_csv, write_parquet
 from big_data_processing_spark.validation import (
@@ -78,6 +92,8 @@ class PipelineResult:
     outputs: dict[str, str] = field(default_factory=dict)
 
 
+# Output names, one sink each.
+SINKS = ("processed", "vendor_stats", "category_stats", "payment_stats", "summary")
 # Keys of the grouped-stats sinks, in ``groupingSets`` column order.
 STATS_KEYS = ("l_returnflag", "qty_category", "l_linestatus")
 
@@ -115,18 +131,40 @@ def _stats_for(stats: DataFrame, key: str, *cols: str | Column) -> DataFrame:
     )
 
 
-def _run_concurrently(spark: SparkSession, *actions: Callable[[], Any]) -> list:
-    """Run independent actions from one thread each and return their
-    results in order. Each thread starts with the caller's local
-    properties (job group, description, scheduler pool), so its jobs
-    are the caller's. Every action ends before the first failure is
-    re-raised, so the caller's cleanup never races a running job."""
-    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(spark)(action))
-            for action in actions
-        ]
-    return [f.result() for f in futures]
+def _stats_sinks(stats: DataFrame) -> list[tuple[str, DataFrame, Callable]]:
+    """(name, frame, writer) of the four sinks read from ``stats``."""
+    vendor = _stats_for(
+        stats, "l_returnflag",
+        "total_trips", "total_revenue", "avg_quantity", "avg_price",
+    )
+    category = _stats_for(
+        stats, "qty_category", "total_trips", "avg_price", "avg_price_per_unit"
+    )
+    payment = _stats_for(
+        stats, "l_linestatus", "total_trips", "avg_price",
+        F.round(F.col("__avg_discount") / F.col("avg_price") * 100.0, 6)
+        .alias("discount_price_ratio_pct"),
+    )
+    summary = vendor.agg(
+        F.sum("total_trips").alias("total_total_trips"),
+        F.round(F.sum("total_revenue"), 2).alias("total_total_revenue"),
+        F.round(F.avg("avg_quantity"), 6).alias("mean_avg_quantity"),
+        F.round(F.avg("avg_price"), 6).alias("mean_avg_price"),
+    )
+    return [
+        ("vendor_stats", vendor, write_parquet),
+        ("category_stats", category, write_parquet),
+        ("payment_stats", payment, write_parquet),
+        ("summary", summary, write_csv),
+    ]
+
+
+def _submit(pool: ThreadPoolExecutor, spark: SparkSession, action: Callable) -> Future:
+    """Run ``action`` on ``pool`` with its own copy of the caller's
+    local properties (job group, description, scheduler pool), so its
+    jobs are the caller's. Each action needs its own copy: Spark sets
+    the SQL execution id in a thread's local properties."""
+    return pool.submit(inheritable_thread_target(spark)(action))
 
 
 def run_pipeline(
@@ -166,61 +204,46 @@ def run_pipeline(
             mrec.rows = int(quality["total_rows"])
         return quality
 
-    quality, cleaned = _run_concurrently(
-        spark,
-        measure_quality,
-        lambda: iqr_filter(clean(raw), "l_extendedprice", exact=False),
-    )
-    enhanced = enrich(cleaned)
-    stats = _grouped_stats(enhanced).cache()
+    outputs = {name: f"{out_dir}/{name}" for name in SINKS}
+
+    def sink(name: str, df: DataFrame, write: Callable) -> None:
+        with monitor.stage(f"sink:{name}"):
+            write(df, outputs[name])
+
+    stats = None
     try:
-        with monitor.stage("aggregates") as arec:
-            vendor_gid = _grouping_id("l_returnflag")
-            clean_rows = sum(
-                r["total_trips"] for r in stats.collect() if r["__gid"] == vendor_gid
+        with ThreadPoolExecutor(max_workers=1 + len(SINKS)) as pool:
+            quality_done = _submit(pool, spark, measure_quality)
+            enhanced = enrich(
+                iqr_filter(clean(raw), "l_extendedprice", exact=False)
             )
-            arec.rows = clean_rows
+            processed = partial(sink, "processed", enhanced, write_parquet)
+            sinks_done = [_submit(pool, spark, processed)]
 
-        vendor = _stats_for(
-            stats, "l_returnflag",
-            "total_trips", "total_revenue", "avg_quantity", "avg_price",
-        )
-        category = _stats_for(
-            stats, "qty_category", "total_trips", "avg_price", "avg_price_per_unit"
-        )
-        payment = _stats_for(
-            stats, "l_linestatus", "total_trips", "avg_price",
-            F.round(F.col("__avg_discount") / F.col("avg_price") * 100.0, 6)
-            .alias("discount_price_ratio_pct"),
-        )
-        summary = vendor.agg(
-            F.sum("total_trips").alias("total_total_trips"),
-            F.round(F.sum("total_revenue"), 2).alias("total_total_revenue"),
-            F.round(F.avg("avg_quantity"), 6).alias("mean_avg_quantity"),
-            F.round(F.avg("avg_price"), 6).alias("mean_avg_price"),
-        )
+            stats = _grouped_stats(enhanced).cache()
+            with monitor.stage("aggregates") as arec:
+                vendor_gid = _grouping_id("l_returnflag")
+                clean_rows = sum(
+                    r["total_trips"]
+                    for r in stats.collect()
+                    if r["__gid"] == vendor_gid
+                )
+                arec.rows = clean_rows
 
-        sinks: list[tuple[str, DataFrame, Callable]] = [
-            ("processed", enhanced, write_parquet),
-            ("vendor_stats", vendor, write_parquet),
-            ("category_stats", category, write_parquet),
-            ("payment_stats", payment, write_parquet),
-            ("summary", summary, write_csv),
-        ]
-        outputs = {name: f"{out_dir}/{name}" for name, _, _ in sinks}
-
-        def sink(name: str, df: DataFrame, write: Callable) -> None:
-            with monitor.stage(f"sink:{name}"):
-                write(df, outputs[name])
-
-        _run_concurrently(spark, *(partial(sink, *s) for s in sinks))
-
-        return PipelineResult(
-            schema_valid=True,
-            quality=quality,
-            raw_rows=int(quality["total_rows"]),
-            clean_rows=clean_rows,
-            outputs=outputs,
-        )
+            sinks_done += [
+                _submit(pool, spark, partial(sink, *s)) for s in _stats_sinks(stats)
+            ]
     finally:
-        stats.unpersist()
+        if stats is not None:
+            stats.unpersist()
+
+    quality = quality_done.result()
+    for done in sinks_done:
+        done.result()
+    return PipelineResult(
+        schema_valid=True,
+        quality=quality,
+        raw_rows=int(quality["total_rows"]),
+        clean_rows=clean_rows,
+        outputs=outputs,
+    )

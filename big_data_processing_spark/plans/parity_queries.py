@@ -20,9 +20,18 @@ from big_data_processing_spark.operators.aggregates import (
     grouped_stats,
     summary_rollup,
 )
-from big_data_processing_spark.operators.cleaning import iqr_filter, range_filter
+from big_data_processing_spark.operators.cleaning import (
+    CLEAN_RULES,  # noqa: F401 — re-exported
+    CLEAN_WHERE,
+    clean,
+    iqr_filter,
+)
 from big_data_processing_spark.operators.enrichment import (
+    QTY_BUCKET_CASE,
+    QTY_BUCKETS,
+    QTY_DEFAULT,
     bucketize,
+    enrich,
     guarded_ratio,
     sink_projection,
 )
@@ -34,49 +43,15 @@ from big_data_processing_spark.validation import quality_metrics
 
 # ---------------------------------------------------------------------------
 # Shared pipeline pieces (the reference's clean → enrich flow,
-# spark_processor.py:104-198, instantiated on lineitem).
+# spark_processor.py:104-198, instantiated on lineitem). The rules,
+# buckets, ``clean`` and ``enrich`` live in operators/cleaning.py and
+# operators/enrichment.py, so ``pipeline`` can use them without
+# importing the query registry.
 # ---------------------------------------------------------------------------
-
-# F1 rules: conjunctive ranges (spark_processor.py:110-118 shape).
-CLEAN_RULES = [
-    ("l_extendedprice", 0.0, 100000.0, False, False),  # 0 < price < 100000
-    ("l_quantity", 0.0, 50.0, False, False),  # 0 < qty < 50
-    ("l_discount", 0.0, 0.08, True, True),  # 0 <= disc <= 0.08
-]
-CLEAN_WHERE = (
-    "l_extendedprice > 0 AND l_extendedprice < 100000 "
-    "AND l_quantity > 0 AND l_quantity < 50 "
-    "AND l_discount >= 0 AND l_discount <= 0.08"
-)
-
-# P1 buckets: left-closed when-ladder (spark_processor.py:185-189 shape).
-QTY_BUCKETS = [("short", 10.0), ("medium", 25.0), ("long", 40.0)]
-QTY_DEFAULT = "very_long"
-QTY_BUCKET_CASE = (
-    "CASE WHEN l_quantity < 10 THEN 'short' "
-    "WHEN l_quantity < 25 THEN 'medium' "
-    "WHEN l_quantity < 40 THEN 'long' "
-    "ELSE 'very_long' END"
-)
 
 
 def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "lineitem")
-
-
-def clean(df: DataFrame) -> DataFrame:
-    return range_filter(df, CLEAN_RULES)
-
-
-def enrich(df: DataFrame) -> DataFrame:
-    """P1 + P2 + P3 on the cleaned table
-    (spark_processor.py:180-198 shape)."""
-    df = bucketize(df, "l_quantity", QTY_BUCKETS, QTY_DEFAULT, "qty_category")
-    df = guarded_ratio(df, "l_extendedprice", "l_quantity", "price_per_unit")
-    df = guarded_ratio(
-        df, "l_discount", "l_extendedprice", "discount_pct", scale=100.0
-    )
-    return df
 
 
 ENRICH_SELECT = (

@@ -54,7 +54,8 @@ def test_sink_projection_rename_and_cast(spark):
 
 
 def test_reporting_views(spark):
-    from big_data_processing_spark.plans.parity_queries import clean, enrich
+    from big_data_processing_spark.operators.cleaning import clean
+    from big_data_processing_spark.operators.enrichment import enrich
     from big_data_processing_spark.plans.views import create_reporting_views
     from big_data_processing_spark.sources.catalog import load_table
     from tests.conftest import SF0001

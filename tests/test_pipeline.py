@@ -2,15 +2,21 @@ from __future__ import annotations
 
 import glob
 import os
+import subprocess
+import sys
+import threading
+import time
 
 import duckdb
 import numpy as np
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
+import big_data_processing_spark.pipeline as pipeline
+from big_data_processing_spark.operators.cleaning import CLEAN_WHERE
 from big_data_processing_spark.pipeline import run_pipeline
-from big_data_processing_spark.plans.parity_queries import CLEAN_WHERE
 from tests.conftest import SF0001, jobs_since
 
 
@@ -173,3 +179,116 @@ def test_pipeline_jobs_stay_in_caller_group_and_failure_cleans_up(spark, tmp_pat
 
     result = run_pipeline(spark, SF0001, str(tmp_path / "out2"))
     assert result.clean_rows > 0
+
+
+def test_processed_sink_does_not_wait_for_the_quality_pass(spark, tmp_path, monkeypatch):
+    """Only the IQR fences gate the sinks: the quality pass blocks
+    until the ``processed`` sink has been written, which deadlocks
+    (and times out) if that sink waits for the quality pass."""
+    processed_written = threading.Event()
+    quality_metrics, write_parquet = pipeline.quality_metrics, pipeline.write_parquet
+
+    class GatedFrame:
+        def __init__(self, df):
+            self._df = df
+
+        def first(self):
+            if not processed_written.wait(60):
+                raise TimeoutError("the processed sink waited for the quality pass")
+            return self._df.first()
+
+    def write_then_signal(df, path):
+        write_parquet(df, path)
+        if path.endswith("/processed"):
+            processed_written.set()
+
+    monkeypatch.setattr(
+        pipeline, "quality_metrics", lambda *a: GatedFrame(quality_metrics(*a))
+    )
+    monkeypatch.setattr(pipeline, "write_parquet", write_then_signal)
+    result = run_pipeline(spark, SF0001, str(tmp_path / "out"))
+    assert result.raw_rows > 0
+    assert processed_written.is_set()
+
+
+def _pool_threads() -> list[str]:
+    return [t.name for t in threading.enumerate()
+            if t.name.startswith("ThreadPoolExecutor")]
+
+
+def _assert_nothing_left_running(sc, persistent: set) -> None:
+    """No job still active, no cached RDD and no pool thread left."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persistent
+    assert _pool_threads() == []
+
+
+def test_pipeline_quality_failure_cleans_up(spark, tmp_path, monkeypatch):
+    """A failing quality action raises only after every other action
+    has ended, and leaves nothing behind."""
+    sc = spark.sparkContext
+    persistent = set(sc._jsc.getPersistentRDDs().keySet())
+    monkeypatch.setattr(
+        pipeline, "quality_metrics",
+        lambda raw, rules: raw.select(F.raise_error(F.lit("quality pass failed"))),
+    )
+    with pytest.raises(Exception, match="quality pass failed"):
+        run_pipeline(spark, SF0001, str(tmp_path / "out"))
+    _assert_nothing_left_running(sc, persistent)
+
+    monkeypatch.undo()
+    assert run_pipeline(spark, SF0001, str(tmp_path / "out2")).clean_rows > 0
+
+
+@pytest.mark.parametrize("cancel_at", ["first_job", "stats_cached"])
+def test_pipeline_cancelled_job_group_cleans_up(spark, tmp_path, cancel_at):
+    """Cancelling the caller's job group mid-run (with the jobs it would
+    still submit) makes the call raise, and leaves nothing behind."""
+    sc = spark.sparkContext
+    jsc, tracker = sc._jsc.sc(), sc.statusTracker()
+    persistent = set(sc._jsc.getPersistentRDDs().keySet())
+    group = f"etl-cancel-{cancel_at}"
+
+    def ready() -> bool:
+        if cancel_at == "first_job":
+            return bool(set(tracker.getJobIdsForGroup(group))
+                        & set(tracker.getActiveJobsIds()))
+        return set(sc._jsc.getPersistentRDDs().keySet()) != persistent
+
+    done = threading.Event()
+
+    def cancel_when_ready() -> None:
+        while not done.is_set():
+            if ready():
+                jsc.cancelJobGroupAndFutureJobs(group, "cancelled by test")
+                return
+            time.sleep(0.005)
+
+    watcher = threading.Thread(target=cancel_when_ready)
+    sc.setJobGroup(group, "run_pipeline cancel check")
+    try:
+        watcher.start()
+        with pytest.raises(Exception, match="cancel"):
+            run_pipeline(spark, SF0001, str(tmp_path / "out"))
+    finally:
+        done.set()
+        watcher.join(30)
+        jsc.clearJobGroup()
+    assert not watcher.is_alive()
+    _assert_nothing_left_running(sc, persistent)
+
+    assert run_pipeline(spark, SF0001, str(tmp_path / "out2")).clean_rows > 0
+
+
+def test_pipeline_import_loads_no_query_plans():
+    """``pipeline`` does not import the query registry."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    loaded = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, big_data_processing_spark.pipeline; "
+         "print(*sorted(m for m in sys.modules "
+         "if m.startswith('big_data_processing_spark.plans')))"],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout.split()
+    assert loaded == []

@@ -17,7 +17,11 @@ ops, then ``--ops`` steady ops. For each steady op it prints one line:
 - ``py4j``: py4j commands the client sent (round trips to the JVM,
   including the garbage-collection thread's object releases);
 - ``compiles``: whole-stage and expression codegen compilations
-  (``CodegenMetrics``), i.e. codegen cache misses.
+  (``CodegenMetrics``), i.e. codegen cache misses;
+- ``jit_cpu_s``: CPU time of the JVM's C1/C2 JIT compiler threads,
+  from ``/proc/<jvm pid>/task/*/stat`` (Linux only). A compiler
+  thread the JVM retires during the op takes its CPU with it, so
+  this can undercount.
 
 A last line holds the median of each field. The workloads and the
 input generator are imported from ``perfbench/`` unchanged, so an op
@@ -37,7 +41,10 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WARMUP_OPS = 2
 FIELDS = ("wall_s", "jobs", "tasks", "busy_s", "idle_s", "py_cpu_s",
-          "py4j", "compiles")
+          "py4j", "compiles", "jit_cpu_s")
+# Thread names as /proc truncates them (15 characters).
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+CLK_TCK = os.sysconf("SC_CLK_TCK")
 
 
 def _jobs_after(store, last_job: int) -> list:
@@ -63,9 +70,26 @@ def _busy_seconds(jobs, start_ms: float, end_ms: float) -> float:
     return busy / 1000.0
 
 
+def _jit_cpu(pid: int) -> dict[int, float]:
+    """CPU seconds so far of each live JIT compiler thread, by tid."""
+    cpu = {}
+    for task in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{task}/stat") as f:
+                stat = f.read()
+        except FileNotFoundError:  # the thread ended
+            continue
+        name = stat[stat.index("(") + 1:stat.rindex(")")]
+        if name.startswith(JIT_THREADS):
+            utime, stime = stat[stat.rindex(")") + 2:].split()[11:13]
+            cpu[int(task)] = (int(utime) + int(stime)) / CLK_TCK
+    return cpu
+
+
 class Probe:
     """Counters read around one op: status-store jobs, py4j commands,
-    codegen compilations and the client's CPU time."""
+    codegen compilations, the client's CPU time and the JVM's JIT
+    compiler CPU time."""
 
     def __init__(self, spark) -> None:
         sc = spark.sparkContext
@@ -73,6 +97,7 @@ class Probe:
         self._store = self._jsc.statusStore()
         self._codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
         self._client = sc._gateway._gateway_client
+        self._jvm_pid = sc._jvm.java.lang.ProcessHandle.current().pid()
         self.sent = 0
 
     def _last_job(self) -> int:
@@ -86,6 +111,7 @@ class Probe:
 
     def measure(self, fn) -> dict:
         last_job, compiles = self._last_job(), self._compiles()
+        jit0 = _jit_cpu(self._jvm_pid)
         original = self._client.send_command
         self.sent = 0
 
@@ -102,6 +128,7 @@ class Probe:
             self._client.send_command = original
             end = time.time()
             cpu1 = os.times()
+            jit1 = _jit_cpu(self._jvm_pid)
         sent = self.sent
         self._last_job()  # drain the listener bus before reading jobs
         jobs = _jobs_after(self._store, last_job)
@@ -116,6 +143,7 @@ class Probe:
             "py_cpu_s": (cpu1.user + cpu1.system) - (cpu0.user + cpu0.system),
             "py4j": sent,
             "compiles": self._compiles() - compiles,
+            "jit_cpu_s": sum(c - jit0.get(t, 0.0) for t, c in jit1.items()),
         }
 
 
