@@ -354,7 +354,7 @@ def _gram_bitmaps(
     gram table is built and pinned here (it is read twice: the
     vocabulary statistic and the dictionary)."""
     if gram_df is None:
-        gram_df = _gram_df(base, block_cols).localCheckpoint(eager=False)
+        gram_df = _gram_df(base, block_cols).transform(partitioning.pin)
     vocab = _max_block_vocab(gram_df, block_cols)
     if not 0 < vocab <= _BITMAP_VOCAB_CAP:
         return None
@@ -413,7 +413,7 @@ def _verify_jaccard_candidates(
       cannot be eliminated or coalesced.
     - callers sort the verified pairs: range partitioning SAMPLES its
       child, re-executing the whole join+intersect pipeline a second
-      time. The tail lazy localCheckpoint (``pin_result``) lets the
+      time. The tail lazy ``partitioning.pin`` (``pin_result``) lets the
       sampler scan cached pair rows instead. Pass ``False`` when the
       caller re-materializes the pairs itself (the cluster builder
       pins its symmetrized edge list) — a second pin is overhead."""
@@ -426,7 +426,7 @@ def _verify_jaccard_candidates(
         .select("id_a", "id_b", _intersection(bits is not None), "sz_a", "sz_b")
     )
     out = _jaccard_filter(verified, threshold)
-    return out.localCheckpoint(eager=False) if pin_result else out
+    return partitioning.pin(out) if pin_result else out
 
 
 @column_cache
@@ -637,7 +637,7 @@ def minhash_near_duplicates(
     the arrays are picked without the exact statistic.
 
     ``pin_result`` (default on) ends the pipeline with a lazy
-    ``localCheckpoint`` of the verified pairs (see
+    ``partitioning.pin`` of the verified pairs (see
     :func:`_verify_jaccard_candidates`). Pass ``False`` when the
     caller immediately re-materializes the pairs itself.
 
@@ -924,7 +924,7 @@ def simhash_near_duplicates(
     # AQE-coalesced 1-partition layout
     sim = partitioning.spread(
         simhash64_table(df, text_col, id_col), id_col
-    ).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
     return hash64_near_dup_pairs(sim, id_col, "simhash", max_hamming)
 
 
@@ -963,7 +963,7 @@ def simhash_near_duplicates_md5(
     sim = partitioning.spread(
         _simhash(toks.join(vocab, "t").select(id_col, "h"), id_col, 32),
         id_col,
-    ).localCheckpoint(eager=False)  # same guard as simhash_near_duplicates
+    ).transform(partitioning.pin)  # same guard as simhash_near_duplicates
     return _chunk_pairs(
         sim, id_col, "simhash", [0, 8, 16, 24, 32], max_hamming
     ).select("id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
@@ -1097,7 +1097,7 @@ def ngram_jaccard_pairs(
     if max_df is not None:
         # one gram-df aggregate serves the candidate cap AND the
         # verifier's bitmap dispatch
-        gram_df = _gram_df(base, block_cols).localCheckpoint(eager=False)
+        gram_df = _gram_df(base, block_cols).transform(partitioning.pin)
         cand = _capped_candidates(
             base, block_cols, id_col, max_df, gram_df=gram_df
         )
@@ -1166,8 +1166,8 @@ def jaccard_prefix_filter_pairs(
     # referenced 3× below (prefix build + both verify sides)
     base = _shingle_base(
         df, text_col, id_col, n, block_cols
-    ).localCheckpoint(eager=False)
-    gram_df = _gram_df(base, block_cols).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
+    gram_df = _gram_df(base, block_cols).transform(partitioning.pin)
     cand = _prefix_filter_candidates(
         base, block_cols, id_col, threshold, gram_df=gram_df
     )
@@ -1414,10 +1414,10 @@ def similarity_join(
         )
     base = _shingle_base(
         df, text_col, id_col, n, block_cols
-    ).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
     # one gram-df aggregate serves planning AND whichever generator
     # wins — vocab-sized, so the checkpoint is cheap to hold
-    gram_df = _gram_df(base, block_cols).localCheckpoint(eager=False)
+    gram_df = _gram_df(base, block_cols).transform(partitioning.pin)
     decision = choose_similarity_plan(
         base, block_cols, id_col, threshold, max_df, cost_ratio,
         gram_df=gram_df,
@@ -1488,7 +1488,7 @@ def winnow_share_pairs(
     # exploded frame twice without re-running the sketch
     sk = hashed.select(
         F.col(id_col), winnow_of_hashes(F.col("h"), window).alias("grams")
-    ).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
     rare = _rare_gram_rows(sk, [], id_col, max_df)
     # fingerprints are distinct per doc (winnow dedups), so count(*)
     # per pair IS the shared-fingerprint count

@@ -18,8 +18,8 @@ decontamination, boilerplate removal) needs.
 PERF pattern (see SCALE.md): token/gram arrays are materialized
 through select boundaries so the tokenizer runs once per row, and
 any gram table that is exploded or referenced more than once gets
-``spread`` (partition by compute, not bytes) + ``localCheckpoint
-(eager=False)`` — generator filter inference would otherwise
+``spread`` (partition by compute, not bytes) + a lazy
+``partitioning.pin`` — generator filter inference would otherwise
 substitute the gram expression back through the projections and
 re-trigger the per-element re-evaluation trap.
 """
@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from big_data_processing_spark import partitioning
 from big_data_processing_spark.functions.text import tokens
 from big_data_processing_spark.partitioning import spread as _spread
 
@@ -61,7 +62,7 @@ def _gram_table(
         _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
         .select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
         .select(F.col(id_col), grams.alias("grams"))
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
     )
 
 
@@ -282,7 +283,7 @@ def bm25_topk(
     spark = df.sparkSession
     toked = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
         F.col(id_col), tokens(F.col(text_col)).alias("t")
-    ).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
     # exact scalars: token total and doc count are longs
     totals = toked.agg(
         F.sum(F.size("t")).alias("tot"), F.count(F.lit(1)).alias("n")
@@ -505,7 +506,7 @@ def dup_span_coverage(
     toked = _spread(
         df.select(F.col(id_col), F.col(text_col)), id_col
     ).select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-    toked = toked.localCheckpoint(eager=False)
+    toked = partitioning.pin(toked)
     base = toked.select(
         F.col(id_col), F.size("__toks").alias("n_tokens")
     )
@@ -526,7 +527,7 @@ def dup_span_coverage(
             ).alias("gram"),
         )
     )
-    g = _spread(g, id_col).localCheckpoint(eager=False)
+    g = _spread(g, id_col).transform(partitioning.pin)
     dfreq = g.groupBy("gram").agg(
         F.countDistinct(id_col).alias("__n_docs")
     )
@@ -597,7 +598,7 @@ def dup_span_removal(
     toked = _spread(
         df.select(F.col(id_col), F.col(text_col)), id_col
     ).select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-    toked = toked.localCheckpoint(eager=False)
+    toked = partitioning.pin(toked)
     g = (
         toked.filter(F.size("__toks") >= n)
         .select(
@@ -615,7 +616,7 @@ def dup_span_removal(
             ).alias("gram"),
         )
     )
-    g = _spread(g, id_col).localCheckpoint(eager=False)
+    g = _spread(g, id_col).transform(partitioning.pin)
     dup_grams = (
         g.groupBy("gram")
         .agg(F.countDistinct(id_col).alias("__n_docs"))

@@ -146,7 +146,7 @@ def kmeans_assign_twolevel(
 
     Flat Lloyd with k = n/target scores every vector against every
     centroid: n·k = n²/target work, a ~20× measured slope for 10×
-    data (SCALE.md round-5 table). Two levels cut it to
+    data (SCALE.md "Measured scaling slopes"). Two levels cut it to
     n·(k1 + k2) ≈ 2n·√(n/target):
 
     - **Coarse**: ``kmeans_assign`` with k1 = ⌈√(n/target)⌉ cells
@@ -191,8 +191,8 @@ def kmeans_assign_twolevel(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
     ).withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v"))))
     # Member frame feeds seed selection, both scoring passes and the
-    # Lloyd update — materialize the coarse lineage ONCE (swept by
-    # release_leaked_checkpoints, same policy as semantic_dedup_pairs).
+    # Lloyd update — materialize the coarse lineage ONCE (freed when
+    # the caller's pin scope closes, as in semantic_dedup_pairs).
     m = partitioning.pin_now(coarse.join(e, on=id_col))
 
     # Per-cell sub-k and deterministic seeds: the k2 lowest ids.
@@ -296,7 +296,8 @@ def semantic_dedup_pairs(
     )
     # Both sides of the within-cluster self-join read the member
     # frame; materialize it ONCE (the k-means lineage above it would
-    # otherwise execute twice). Swept by release_leaked_checkpoints.
+    # otherwise execute twice). Freed when the caller's pin scope
+    # closes.
     m = partitioning.pin_now(m)
 
     # On a SMALL corpus the cluster key has few distinct values (k ∝

@@ -28,8 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from big_data_processing_spark.operators.windows import topk_per_group
+from big_data_processing_spark import partitioning
 from big_data_processing_spark.partitioning import (
-    pin_now,
     spread,
     spread_arrow,
     spread_even,
@@ -600,7 +600,7 @@ def cosine_near_dup_pairs_lsh(
             out["bucket"] = buckets.reshape(-1).astype(np.int32)
             yield pd.DataFrame(out)
 
-    sig = pin_now(spread_arrow(
+    sig = partitioning.pin_now(spread_arrow(
         df.select(*blocks, F.col(id_col), F.col(vec_col)), id_col
     ).mapInPandas(
         kernel, schema=f"{block_schema}{id_col} long, table int, bucket int"
@@ -700,7 +700,7 @@ def cosine_near_dup_pairs_ivf(
             out["cell"] = cells.reshape(-1).astype("int32")
             yield pd.DataFrame(out)
 
-    sig = pin_now(spread_arrow(
+    sig = partitioning.pin_now(spread_arrow(
         df.select(*blocks, F.col(id_col), F.col(vec_col)), id_col
     ).mapInPandas(
         assign_kernel,

@@ -10,18 +10,20 @@ Scale notes
   graphs are unions of small cliques, so 3-5 rounds typically
   suffice. Each round is one join + one aggregate on (id, label)
   pairs — never document payloads.
-- Every iteration TRUNCATES LINEAGE (a lazy localCheckpoint that
-  the round's own convergence count materializes; the edge list and
-  the seed labels are pinned with ``partitioning.pin_now``): without
-  it the plan doubles per round and the driver dies in analysis
-  long before the executors break a sweat. This is the canonical
-  legitimate checkpoint use — iterative algorithms — unlike the
-  self-join "optimization" that SCALE.md warns about.
-- Superseded rounds are FREED (``release_checkpoint``):
-  ``spark.catalog.clearCache()`` does not touch localCheckpoint
-  block storage, so without explicit release the loop leaks one
-  label frame per round — measured as a timed pass running slower
-  than its own warmup at sf0.1 (r3 bench).
+- Every iteration TRUNCATES LINEAGE (a lazy ``partitioning.pin``
+  that the round's own convergence count materializes; the edge
+  list and the seed labels are pinned with
+  ``partitioning.pin_now``): without it the plan doubles per round
+  and the driver dies in analysis long before the executors break a
+  sweat. This is the canonical legitimate checkpoint use — iterative
+  algorithms — unlike the self-join "optimization" that SCALE.md
+  warns about.
+- Superseded rounds and the edge list are freed at once
+  (``partitioning.unpin``), so a long loop holds two label frames at
+  most. The last round's frame, which still carries the ``__old``
+  column of the convergence check, is freed when the caller's
+  ``partitioning.pin_scope`` closes; a caller that memoizes the
+  result re-projects and pins it (``plans.doc_clusters``).
 - Pointer jumping makes convergence ~log(diameter), so few rounds
   run at all; convergence is detected by the round's ONE
   materializing action itself (a filter-count over the lazily
@@ -34,69 +36,10 @@ Scale notes
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from big_data_processing_spark import partitioning
-
-_log = logging.getLogger(__name__)
-
-
-def release_checkpoint(df: DataFrame) -> None:
-    """Free the storage blocks behind a local-checkpointed DataFrame
-    (``partitioning.pin_now``, or a lazy ``localCheckpoint`` an action
-    has materialized). The frame is UNUSABLE afterwards — only call
-    on frames nothing references anymore (a superseded loop round).
-
-    Uses private plan internals (no public API frees checkpoint
-    blocks; ``spark.catalog.clearCache()`` does not touch them), so
-    it verifies the analyzed plan really is the checkpoint's
-    ``LogicalRDD`` scan before touching it, and WARNS instead of
-    silently no-opping when the shape is unexpected — a silent skip
-    would reintroduce the per-round block leak this exists to fix
-    (r3 bench: timed pass slower than its own warmup)."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            _log.warning(
-                "release_checkpoint: plan is %s, not LogicalRDD — "
-                "frame left alone (checkpoint blocks NOT freed)",
-                plan.getClass().getSimpleName(),
-            )
-            return
-        plan.rdd().unpersist(False)
-    except Exception as e:  # noqa: BLE001 — other Spark versions / shapes
-        _log.warning(
-            "release_checkpoint: could not free checkpoint blocks (%s); "
-            "storage may accumulate across loop rounds", e
-        )
-
-
-def release_leaked_checkpoints(spark, keep=()) -> int:
-    """Free EVERY persistent RDD in the context except ids in
-    ``keep`` — the between-queries hygiene a benchmark or test
-    harness needs. ``localCheckpoint`` blocks (e.g. the lazy
-    checkpoint guarding HOF re-inlining in ``_gram_table``) are NOT
-    cleared by ``spark.catalog.clearCache()``, so a harness that runs
-    many checkpoint-building queries back-to-back accumulates dead
-    blocks until storage pressure and GC churn dominate the timings
-    (measured: benchmark_decontaminate 1.4 s clean vs 3-18 s under
-    accumulated blocks). Deliberately-pinned frames (the memoized
-    cluster frame) must be passed in ``keep`` — freeing a
-    lineage-truncated frame someone still holds is a use-after-free.
-
-    Returns the number of RDDs released."""
-    keep = set(keep)
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    freed = 0
-    for rid in list(jmap.keySet().toArray()):
-        if int(str(rid)) in keep:
-            continue
-        jmap.get(rid).unpersist(False)
-        freed += 1
-    return freed
 
 
 def connected_components(
@@ -177,15 +120,15 @@ def connected_components(
         # checkpointed RDD never completes — the observation never
         # fires and the loop mis-terminated, caught by the sf0.001
         # oracle gate + test_connected_components_chain_and_island.)
-        new_labels = new_labels.localCheckpoint(eager=False)
+        new_labels = partitioning.pin(new_labels)
         changed = new_labels.filter(
             F.col("comp") != F.col("__old")
         ).count()
-        release_checkpoint(labels)
+        partitioning.unpin(labels)
         labels = new_labels
         if changed == 0:
             break
-    release_checkpoint(sym)
+    partitioning.unpin(sym)
     return labels.select("id", "comp")
 
 
@@ -247,8 +190,7 @@ def pagerank(
     # The edge list is read once per iteration; materialize it ONCE
     # (pinned checkpoint, truncating the — possibly expensive — edge-
     # build lineage) so iterations don't re-run the upstream joins.
-    # Blocks are swept by the harness's release_leaked_checkpoints
-    # after the consuming query completes.
+    # Its blocks are freed when the caller's pin scope closes.
     norm = partitioning.pin_now(norm)
     teleport = (1.0 - damping) / n_nodes
     pr = nodes.select(F.col(node), F.lit(1.0 / n_nodes).alias("pr"))

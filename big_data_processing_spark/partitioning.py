@@ -1,5 +1,6 @@
 """Partitioning utilities: align partition count with COMPUTE, not
-bytes, for CPU-dense operators.
+bytes, for CPU-dense operators, and the one pin lifecycle of the
+package.
 
 Spark sizes scan partitions by input bytes
 (``spark.sql.files.maxPartitionBytes``) and AQE coalesces shuffle
@@ -8,13 +9,51 @@ work, both wrong for operators that do orders of magnitude more CPU
 per byte (shingling, pairwise set similarity, vector math). A small
 input arrives as ONE partition and the whole operator runs on one
 core of a 1000-core cluster.
+
+Pins
+----
+A pin is a local checkpoint: its blocks live in executor storage
+and its lineage is cut, so neither ``spark.catalog.clearCache()``
+nor JVM GC frees it while the frame is reachable. Every pin in the
+package is made here (:func:`pin`, :func:`pin_now`), and one rule
+frees them: a pin lives until the :func:`pin_scope` that made it
+closes. An op opens one scope around its whole body; a pin that must
+outlive the op (a session-level memo) leaves the scope with
+:func:`keep`, and an iterative loop frees a superseded round at once
+with :func:`unpin`. Pins made outside any scope are not tracked, so
+a caller holding a returned frame (the query registry's external
+driver) never sees its blocks freed under it.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Callable, Iterator
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
+
+# RDD ids pinned in each open scope of this thread, innermost last.
+_scopes: ContextVar[tuple[set[int], ...]] = ContextVar("pins", default=())
+
+
+def _rdd_id(pinned: DataFrame) -> int:
+    """Id of the checkpointed RDD a pinned frame scans."""
+    return pinned._jdf.queryExecution().analyzed().rdd().id()
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Lazy local checkpoint of ``df``: its blocks are written by the
+    first action that runs the pinned frame, and later actions scan
+    them instead of re-running ``df``'s plan. Chains spell it
+    ``df.transform(partitioning.pin)``. Recorded in the innermost
+    open :func:`pin_scope`, which frees it on exit."""
+    out = df.localCheckpoint(eager=False)
+    scopes = _scopes.get()
+    if scopes:
+        scopes[-1].add(_rdd_id(out))
+    return out
 
 
 def pin_now(
@@ -22,30 +61,69 @@ def pin_now(
 ):
     """Materialize ``df`` NOW as a local checkpoint and return the
     pinned frame — the safe spelling of ``localCheckpoint(eager=True)``.
+    Same lifecycle as :func:`pin`.
 
-    Measured at sf0.1/local[32] (r12): ``eager=True`` materializes
-    through ``Dataset.checkpoint``'s internal ``rdd.count()`` and ran
-    FAR slower than executing the identical plan as a normal query —
-    the md5 gram-bitmap build stage cost 8.0 s executor CPU eager vs
-    1.3 s lazy-then-``count()`` (md5_minhash_build 20.3 → 9.6 s,
-    doc_cluster_build 23.9 → 18.5 s standalone after converting
-    every pin). A lazy checkpoint followed by one ``count()`` action
-    materializes the same blocks exactly once — same lifecycle, same
-    lineage truncation, same pinned-block semantics (the count scans
-    the blocks it just wrote) — while the materializing execution
-    keeps whole-stage codegen + AQE. Use this anywhere a frame is
-    referenced by concurrently-launched consumer jobs (broadcast
-    sides race a purely lazy pin and rebuild the frame per side).
+    Measured at sf0.1/local[32]: ``eager=True`` materializes through
+    ``Dataset.checkpoint``'s internal ``rdd.count()`` and ran FAR
+    slower than executing the identical plan as a normal query — the
+    md5 gram-bitmap build stage cost 8.0 s executor CPU eager vs
+    1.3 s lazy-then-``count()``. A lazy checkpoint followed by one
+    ``count()`` action materializes the same blocks exactly once —
+    same lineage truncation, same pinned-block semantics (the count
+    scans the blocks it just wrote) — while the materializing
+    execution keeps whole-stage codegen + AQE. Use this anywhere a
+    frame is referenced by concurrently-launched consumer jobs
+    (broadcast sides race a purely lazy pin and rebuild the frame per
+    side).
 
     ``summary`` (pinned frame → one-row frame) replaces the ``count()``
     as the materializing action, so a statistic of the pinned rows
     costs no job of its own; ``(pinned frame, summary row)`` is then
     returned."""
-    out = df.localCheckpoint(eager=False)
+    out = pin(df)
     if summary is not None:
         return out, summary(out).first()
     out.count()
     return out
+
+
+def keep(pinned: DataFrame) -> DataFrame:
+    """Take a pinned frame out of every open scope, so it outlives
+    them: a session-level materialized view such as the memoized
+    cluster frames. Returns ``pinned``."""
+    rid = _rdd_id(pinned)
+    for pins in _scopes.get():
+        pins.discard(rid)
+    return pinned
+
+
+def unpin(pinned: DataFrame) -> None:
+    """Free the blocks of a pinned frame now. The frame is UNUSABLE
+    afterwards — only call on frames nothing references anymore (a
+    superseded loop round). ``SparkContext.unpersistRDD`` frees the
+    blocks as ``RDD.unpersist`` does, without its per-call warning
+    that a locally checkpointed RDD cannot be recomputed."""
+    rid = _rdd_id(keep(pinned))
+    pinned.sparkSession.sparkContext._jsc.sc().unpersistRDD(rid, False)
+
+
+@contextmanager
+def pin_scope() -> Iterator[None]:
+    """Free every pin made inside the block (and not :func:`keep`-ed)
+    when it exits, whether it returns, raises or is cancelled. The
+    record is per thread and per context, so concurrent callers each
+    free only their own pins."""
+    pins: set[int] = set()
+    token = _scopes.set((*_scopes.get(), pins))
+    try:
+        yield
+    finally:
+        _scopes.reset(token)
+        sc = SparkContext._active_spark_context
+        if pins and sc is not None:
+            jsc = sc._jsc.sc()
+            for rid in pins:
+                jsc.unpersistRDD(rid, False)
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:

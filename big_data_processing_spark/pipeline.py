@@ -161,10 +161,20 @@ def _stats_sinks(stats: DataFrame) -> list[tuple[str, DataFrame, Callable]]:
 
 def _submit(pool: ThreadPoolExecutor, spark: SparkSession, action: Callable) -> Future:
     """Run ``action`` on ``pool`` with its own copy of the caller's
-    local properties (job group, description, scheduler pool), so its
-    jobs are the caller's. Each action needs its own copy: Spark sets
-    the SQL execution id in a thread's local properties."""
+    local properties (job group, scheduler pool), so its jobs are the
+    caller's. Each action needs its own copy: Spark sets the SQL
+    execution id in a thread's local properties."""
     return pool.submit(inheritable_thread_target(spark)(action))
+
+
+def _label_jobs(spark: SparkSession, label: str) -> None:
+    """Name this thread's next jobs ``label``: their description and
+    call site. PySpark sets a job's call site only while no other
+    thread is inside an action (one process-wide depth counter), so a
+    pool action would otherwise carry the call site of the action
+    another thread started first."""
+    spark.sparkContext.setJobDescription(label)
+    spark.sparkContext._jsc.setCallSite(label)
 
 
 def run_pipeline(
@@ -199,6 +209,7 @@ def run_pipeline(
     ]
 
     def measure_quality() -> dict[str, Any]:
+        _label_jobs(spark, "quality_metrics")
         with monitor.stage("quality_metrics") as mrec:
             quality = quality_metrics(raw, rules).first().asDict()
             mrec.rows = int(quality["total_rows"])
@@ -207,6 +218,7 @@ def run_pipeline(
     outputs = {name: f"{out_dir}/{name}" for name in SINKS}
 
     def sink(name: str, df: DataFrame, write: Callable) -> None:
+        _label_jobs(spark, f"sink:{name}")
         with monitor.stage(f"sink:{name}"):
             write(df, outputs[name])
 

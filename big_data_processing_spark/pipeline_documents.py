@@ -66,7 +66,11 @@ Scale notes
   pass; for transitive near-dup clusters switch to a graph step
   (GraphFrames or iterative joins).
 - The near-dup pairs are read once, by a ``distinct``, so they are
-  not pinned (``pin_result=False``).
+  not pinned (``pin_result=False``). The pins the near-dup operator
+  makes (the shingle frame, and on small vocabularies the gram table
+  and the gram bitmaps) are freed when the call returns or raises:
+  the whole call is one ``partitioning.pin_scope``, so a closed loop
+  of calls holds no more storage after each call than before it.
 - The per-language sample keeps class balance under a size budget
   (seeded, reproducible).
 """
@@ -78,6 +82,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_processing_spark import partitioning
 from big_data_processing_spark.functions.dedup import (
     dedup_by_fingerprint,
     minhash_near_duplicates,
@@ -160,6 +165,7 @@ class _Counts:
         return self._obs.get
 
 
+@partitioning.pin_scope()
 def run_document_pipeline(
     spark: SparkSession,
     sf_dir: str,

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from big_data_processing_spark import partitioning
 from big_data_processing_spark.functions.sketches import heavy_hitters
 from big_data_processing_spark.operators.aggregates import (
     dsum,
@@ -689,7 +690,7 @@ def q_audio_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="media_id long, fmt long, sample_rate int, "
         "n_frames int, channels int, mean_amp double, rms double, "
         "peak double",
-    ).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
     # pinned before the sort: the orderBy's range partitioner
     # samples its child — unpinned, every WAV decodes TWICE
     return out.select(
@@ -1402,9 +1403,7 @@ def q_video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = ids.mapInPandas(synth, schema="media_id long, content binary")
     # pinned before the sort: the orderBy's range partitioner
     # samples its child — unpinned, every AVI decodes TWICE
-    out = sample_video_frames_real(media, every_n=2).localCheckpoint(
-        eager=False
-    )
+    out = partitioning.pin(sample_video_frames_real(media, every_n=2))
     return out.select(
         "media_id",
         "frame",

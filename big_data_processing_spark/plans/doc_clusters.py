@@ -11,17 +11,21 @@ and memoized as a pinned local checkpoint (``partitioning.pin_now``)
 — the engine-level analogue of a materialized view over a
 deterministic pipeline.
 
-Why a local checkpoint and not ``persist()``: the memo must survive the
-caller's cache hygiene (`spark.catalog.clearCache()` between bench /
-driver queries clears the CacheManager but not checkpoint block
-storage), and the frame is tiny — (id, cluster_id, bool) per
-document, never document payloads — so pinning it is cheap at any
-scale. One entry is kept PER (applicationId, dir, params) key —
-frames handed to earlier callers stay valid for the life of the
-application (releasing them on a later call with a different key
-would be a use-after-free for anyone still holding the old frame).
-Entries of stopped applications are dropped from the dict only;
-their block storage died with the context.
+The memo frames are the pins that outlive the op that built them:
+each is taken out of the caller's ``partitioning.pin_scope`` with
+``partitioning.keep``, while the scratch pins of the build (the
+edge list and last label round of the connected components, the
+md5 gram table) are freed when that scope closes. Why a local
+checkpoint and not ``persist()``: ``spark.catalog.clearCache()``
+does not touch checkpoint block storage, and the frame is tiny —
+(id, cluster_id, bool) per document, never document payloads — so
+pinning it is cheap at any scale. One entry is kept PER
+(applicationId, dir, params) key — frames handed to earlier callers
+stay valid for the life of the application (releasing them on a
+later call with a different key would be a use-after-free for
+anyone still holding the old frame). Entries of stopped
+applications are dropped from the dict only; their block storage
+died with the context.
 """
 
 from __future__ import annotations
@@ -92,21 +96,6 @@ CAPPED_PAIRS_CTES = f"""g AS (
 _CACHE: dict[tuple, DataFrame] = {}
 
 
-def pinned_rdd_ids() -> set[int]:
-    """RDD ids of the memoized cluster frames — the keep-set for
-    ``release_leaked_checkpoints`` so harness-level block hygiene
-    never frees a frame consumers still hold."""
-    ids: set[int] = set()
-    for df in _CACHE.values():
-        try:
-            plan = df._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == "LogicalRDD":
-                ids.add(int(str(plan.rdd().id())))
-        except Exception:  # noqa: BLE001 — stopped context etc.
-            pass
-    return ids
-
-
 def doc_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, cluster_id, is_representative) transitive near-dup
     clusters of ``documents`` under the canonical exact-Jaccard
@@ -146,7 +135,7 @@ def doc_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # twice
         pin_result=False,
     )
-    clusters = partitioning.pin_now(dedup_clusters(pairs))
+    clusters = partitioning.keep(partitioning.pin_now(dedup_clusters(pairs)))
     # Drop (dict-only) entries of stopped applications — their block
     # storage died with the context. Same-app entries are KEPT, one
     # per (dir, params): releasing a live frame an earlier caller may
@@ -197,12 +186,12 @@ def md5_minhash_frames(
     if gkey in _CACHE and skey in _CACHE:
         return _CACHE[gkey], _CACHE[skey]
     docs = load_table(spark, sf_dir, "documents")
-    grams = partitioning.pin_now(
+    grams = partitioning.keep(partitioning.pin_now(
         md5_gram_sets(docs, "text", "doc_id", MH_SHINGLE_N)
-    )
-    sig = partitioning.pin_now(
+    ))
+    sig = partitioning.keep(partitioning.pin_now(
         md5_minhash_signatures(grams, "doc_id", MH_NUM_PERM)
-    )
+    ))
     for old_key in list(_CACHE):
         if old_key[0] != base[0]:
             del _CACHE[old_key]
@@ -228,5 +217,7 @@ def md5_gram_bits(spark: SparkSession, sf_dir: str) -> DataFrame | None:
         return _CACHE[bkey]
     grams, _sig = md5_minhash_frames(spark, sf_dir)
     bits = _gram_bitmaps(grams, "doc_id")
+    if bits is not None:
+        partitioning.keep(bits)
     _CACHE[bkey] = bits
     return bits

@@ -16,6 +16,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_processing_spark import partitioning
 from big_data_processing_spark.functions.dedup import (
     dedup_by_fingerprint,
     minhash_near_duplicates,
@@ -1031,7 +1032,7 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pinned before the sort: the orderBy's range partitioner
         # samples its child — unpinned, every image decodes TWICE
         decode_media_stats(media)
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
         .select(
             "media_id",
             (F.col("media_id") % 5).alias("fmt"),
@@ -1115,7 +1116,7 @@ def q_image_features_16bit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pinned before the sort: the orderBy's range partitioner
         # samples its child — unpinned, every image decodes TWICE
         decode_media_stats(media)
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
         .select(
             "media_id",
             (F.col("media_id") % 2).alias("fmt"),
@@ -1223,7 +1224,7 @@ def q_image_features_interlaced(
         # pinned before the sort: the orderBy's range partitioner
         # samples its child — unpinned, every image decodes TWICE
         decode_media_stats(media)
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
         .select(
             "media_id",
             (F.col("media_id") % 4).alias("fmt"),
@@ -1326,7 +1327,7 @@ def q_image_features_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pinned before the sort: the orderBy's range partitioner
         # samples its child — unpinned, every image decodes TWICE
         decode_media_stats(media)
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
         .select(
             "media_id",
             (F.col("media_id") % 4).alias("fmt"),
@@ -1433,7 +1434,7 @@ def q_image_features_jpeg_progressive(
         # pinned before the sort: the orderBy's range partitioner
         # samples its child — unpinned, every image decodes TWICE
         decode_media_stats(media)
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
         .select(
             "media_id",
             (F.col("media_id") % 4).alias("fmt"),
@@ -1538,7 +1539,7 @@ def q_image_near_dup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # freeze an AQE-coalesced 1-partition layout
     hashes = spread(
         extract_image_dhash(media).filter("decode_ok"), "media_id"
-    ).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
     return (
         hash64_near_dup_pairs(hashes, "media_id", "dhash", max_hamming=3)
         .select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
@@ -1635,7 +1636,7 @@ def q_image_features_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pinned before the sort: the orderBy's range partitioner
         # samples its child — unpinned, every image decodes TWICE
         decode_media_stats(media)
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
         .select(
             "media_id",
             (F.col("media_id") % 8).alias("fmt"),
@@ -1742,7 +1743,7 @@ def q_audio_near_dup_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = ids.mapInPandas(gen, schema="media_id long, content binary")
     hashes = spread(
         extract_audio_fingerprint(media).filter("decode_ok"), "media_id"
-    ).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
     return (
         hash64_near_dup_pairs(hashes, "media_id", "afp", max_hamming=5)
         .select(
@@ -1854,7 +1855,7 @@ def q_image_recompress_dhash_audit(
     media = ids.mapInPandas(gen, schema="media_id long, content binary")
     hashes = spread(
         extract_image_dhash(media).filter("decode_ok"), "media_id"
-    ).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
     tagged = hashes.select(
         (F.col("media_id") / 3).cast("long").alias("gid"),
         (F.col("media_id") % 3).alias("kind"),
@@ -2031,9 +2032,7 @@ def q_jsonl_quarantine_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below is exactly that); materializing severs the file-source
     # lineage, which is the documented workaround — and the slice is
     # 500 rows
-    from big_data_processing_spark.partitioning import pin_now
-
-    parsed = pin_now(read_jsonl_quarantine(spark, f"{work}/raw", schema))
+    parsed = partitioning.pin_now(read_jsonl_quarantine(spark, f"{work}/raw", schema))
     good = (
         parsed.filter(F.col("_corrupt").isNull())
         .groupBy("lang")
@@ -2180,15 +2179,13 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact ground truth (referenced by BOTH recall branches of
     # the union) and each approximate path execute once per audit,
     # not once per branch
-    exact = brute_force_cosine_topk(emb, queries, k=5).localCheckpoint(
-        eager=False
-    )
+    exact = partitioning.pin(brute_force_cosine_topk(emb, queries, k=5))
     lsh = lsh_cosine_topk(
         emb, queries, dim=64, k=5, num_planes=4, num_tables=8
-    ).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
     ivf = ivf_cosine_topk(
         emb, queries, k=5, n_centroids=16, n_probe=4
-    ).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
     return (
         ann_recall(exact, lsh).withColumn("method", F.lit("lsh"))
         .unionByName(
@@ -3968,16 +3965,14 @@ def q_minhash_fastpath_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned NOW: referenced by the fused per-pair join AND the
     # n_twin aggregate below — a purely lazy pin loses the
     # concurrent-subtree race and runs the twin pipeline twice
-    from big_data_processing_spark.partitioning import pin_now
-
-    twin = pin_now(twin)
+    twin = partitioning.pin_now(twin)
 
     # identical-gram-set keys: md5 the sorted gram list (128-bit —
     # group identity without shuffling full gram arrays). Referenced
     # by the expected-count aggregate AND the fused per-pair join;
     # pinned NOW for the same race reason (tiny: one 32-hex key per
     # doc).
-    gk = pin_now(grams.select(
+    gk = partitioning.pin_now(grams.select(
         "doc_id",
         F.md5(F.concat_ws("\x01", F.array_sort("grams"))).alias("k"),
     ))
@@ -4132,9 +4127,7 @@ def q_simhash_fastpath_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_processing_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    fast = simhash_near_duplicates(docs, "text", "doc_id").localCheckpoint(
-        eager=False
-    )
+    fast = partitioning.pin(simhash_near_duplicates(docs, "text", "doc_id"))
     tks = docs.select(
         "doc_id", tokens(F.col("text")).alias("t")
     ).filter(F.size("t") > 0)
@@ -4457,9 +4450,7 @@ def q_ann_recall_floor_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    exact = brute_force_cosine_topk(emb, queries, k=5).localCheckpoint(
-        eager=False
-    )
+    exact = partitioning.pin(brute_force_cosine_topk(emb, queries, k=5))
     lsh = lsh_cosine_topk(
         emb, queries, dim=64, k=5, num_planes=4, num_tables=8
     )
@@ -4867,9 +4858,7 @@ def q_pq_recall_floor_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    exact = brute_force_cosine_topk(emb, queries, k=5).localCheckpoint(
-        eager=False
-    )
+    exact = partitioning.pin(brute_force_cosine_topk(emb, queries, k=5))
     adc = pq_adc_topk(emb, queries, k=5, m=PQ_PARAMS_MAIN[0],
                        ksub=PQ_PARAMS_MAIN[1])
     rerank = pq_rerank_topk(emb, queries, k=5, shortlist=50,
@@ -5194,7 +5183,7 @@ def q_streaming_near_dup_parity(
             ),
             "hist_id",
         )
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
     )
 
     work = scratch_dir("snd_chunks", sf_dir)
@@ -5456,7 +5445,7 @@ def q_image_features_webp_lossy(
         # pinned before the sort: the orderBy's range partitioner
         # samples its child — unpinned, every image decodes TWICE
         decode_media_stats(media)
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
         .select(
             "media_id",
             (F.col("media_id") % 6).alias("variant"),
@@ -5571,7 +5560,7 @@ def q_video_frame_features_mjpeg(
     # frame decode per video per execution)
     return (
         sample_video_frames_real(media, every_n=2)
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
         .orderBy("media_id", "frame")
     )
 
@@ -5673,7 +5662,7 @@ def q_image_features_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pinned before the sort: the orderBy's range partitioner
         # samples its child — unpinned, every image decodes TWICE
         decode_media_stats(media)
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
         .select(
             "media_id",
             (F.col("media_id") % 8).alias("fmt"),
@@ -5770,6 +5759,6 @@ def q_gif_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole GIF LZW decode a second time
     return (
         sample_video_frames_real(media, every_n=2)
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
         .orderBy("media_id", "frame")
     )

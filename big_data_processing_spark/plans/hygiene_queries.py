@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_processing_spark import partitioning
 from big_data_processing_spark.functions.hygiene import (
     boilerplate_ngrams,
     decontaminate,
@@ -466,7 +467,7 @@ def q_compression_ratio_hygiene(
     # its child — unpinned, the zlib probe pipeline runs TWICE
     return (
         compression_ratio(docs, "text", "doc_id")
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
         .orderBy("doc_id")
     )
 
@@ -595,7 +596,7 @@ def q_countmin_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         F.explode(tokens(F.col("text"))).alias("token")
-    ).localCheckpoint(eager=False)
+    ).transform(partitioning.pin)
     truth = tok.groupBy("token").agg(F.count(F.lit(1)).alias("true_cnt"))
     probed = truth.orderBy(F.col("true_cnt").desc(), "token").limit(20)
     sketch = countmin_table(tok, "token", CM_WIDTH, CM_DEPTH)
@@ -702,7 +703,7 @@ def q_hybrid_related_docs_rrf(
             "doc_id", F.explode(tokens(F.col("text"))).alias("token")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(partitioning.pin)
     )
     dsize = dtok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     qtok = dtok.filter(F.col("doc_id") < 5).select(

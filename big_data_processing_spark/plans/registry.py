@@ -70,7 +70,7 @@ def _load_all() -> None:
 # order) — no harness-aware reordering. An external checker that
 # samples a prefix sees whatever order the modules register in;
 # full-surface coverage lives in tools/oracle_check.py, which runs
-# EVERY registered query against its oracle and writes
-# CORRECTNESS_FULL_r*.json.
+# EVERY registered query against its oracle (``--json`` writes a
+# per-query report).
 
 _load_all()

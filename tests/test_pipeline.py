@@ -181,6 +181,34 @@ def test_pipeline_jobs_stay_in_caller_group_and_failure_cleans_up(spark, tmp_pat
     assert result.clean_rows > 0
 
 
+def test_pool_jobs_carry_their_action_label(spark, tmp_path):
+    """Each action run from the pipeline's pool names its jobs after
+    its monitor stage, call site and description. PySpark sets a call
+    site only when no other thread is inside an action, so without the
+    label quality-pass and sink jobs carried the caller's description
+    and the call site of the concurrent IQR fence job."""
+    sc = spark.sparkContext
+    labels = {"quality_metrics", *(f"sink:{name}" for name in pipeline.SINKS)}
+    run_pipeline(spark, SF0001, str(tmp_path / "warm"))
+    last_job = max((j for j, _ in jobs_since(sc, -1)), default=-1)
+    sc.setJobGroup("etl-labels", "caller")
+    try:
+        run_pipeline(spark, SF0001, str(tmp_path / "out"))
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    store = sc._jsc.sc().statusStore()
+    described = {}
+    for job_id, _group in jobs_since(sc, last_job):
+        job = store.job(job_id)
+        desc = job.description()
+        described[job_id] = (job.name(), desc.get() if desc.isDefined() else None)
+    assert labels <= {desc for _name, desc in described.values()}
+    for name, desc in described.values():
+        if desc in labels:
+            # the label, or PySpark's own call site of this action
+            assert name == desc or "pipeline.py" in name, (name, desc)
+
+
 def test_processed_sink_does_not_wait_for_the_quality_pass(spark, tmp_path, monkeypatch):
     """Only the IQR fences gate the sinks: the quality pass blocks
     until the ``processed`` sink has been written, which deadlocks

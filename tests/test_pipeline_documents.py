@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import dataclasses
 import glob
 import os
+import threading
+import time
 
 import duckdb
 import pytest
@@ -151,6 +154,76 @@ def test_document_pipeline_job_count(spark, tmp_path):
     last_job = max((j for j, _ in jobs_since(sc, -1)), default=-1)
     run_document_pipeline(spark, SF0001, str(tmp_path))
     assert len(jobs_since(sc, last_job)) <= 27
+
+
+def _storage(spark) -> tuple[set[int], int]:
+    """Persistent RDD ids and the bytes the block manager stores."""
+    jsc = spark.sparkContext._jsc
+    stored = sum(r.memSize() + r.diskSize() for r in jsc.sc().getRDDStorageInfo())
+    return set(jsc.getPersistentRDDs().keySet()), stored
+
+
+def _counts(res) -> dict:
+    return {k: v for k, v in dataclasses.asdict(res).items() if k != "out_path"}
+
+
+def test_document_pipeline_frees_its_pins(spark, tmp_path):
+    """No pin outlives its call: after each call the persistent RDDs
+    and stored bytes are what they were before it. SF0001 takes the
+    bitmap path, whose shingle pin, gram table and bitmap pin each
+    outlived the call before the call became one pin scope."""
+    results = []
+    for i in range(3):
+        before = _storage(spark)
+        results.append(_counts(run_document_pipeline(spark, SF0001, str(tmp_path / str(i)))))
+        assert _storage(spark) == before
+    assert results[0] == results[1] == results[2]
+
+
+@pytest.mark.parametrize("cancel_at", ["first_job", "pinned"])
+def test_document_pipeline_cancelled_job_group_cleans_up(spark, tmp_path, cancel_at):
+    """Cancelling the caller's job group (with the jobs it would still
+    submit) at its first running job, or once the call has pinned a
+    frame, makes the call raise and leaves nothing behind: no active
+    job, no pin. The next call gives the same result as an
+    uncancelled one."""
+    sc = spark.sparkContext
+    jsc, tracker = sc._jsc.sc(), sc.statusTracker()
+    want = _counts(run_document_pipeline(spark, SF0001, str(tmp_path / "before")))
+    persistent = set(sc._jsc.getPersistentRDDs().keySet())
+    group = f"docs-cancel-{cancel_at}"
+
+    def ready() -> bool:
+        if cancel_at == "first_job":
+            return bool(set(tracker.getJobIdsForGroup(group))
+                        & set(tracker.getActiveJobsIds()))
+        return set(sc._jsc.getPersistentRDDs().keySet()) != persistent
+
+    done = threading.Event()
+
+    def cancel_when_ready() -> None:
+        while not done.is_set():
+            if ready():
+                jsc.cancelJobGroupAndFutureJobs(group, "cancelled by test")
+                return
+            time.sleep(0.005)
+
+    watcher = threading.Thread(target=cancel_when_ready)
+    sc.setJobGroup(group, "run_document_pipeline cancel check")
+    try:
+        watcher.start()
+        with pytest.raises(Exception, match="cancel"):
+            run_document_pipeline(spark, SF0001, str(tmp_path / "cancelled"))
+    finally:
+        done.set()
+        watcher.join(30)
+        jsc.clearJobGroup()
+    assert not watcher.is_alive()
+    jsc.listenerBus().waitUntilEmpty()
+    assert list(tracker.getActiveJobsIds()) == []
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persistent
+
+    assert _counts(run_document_pipeline(spark, SF0001, str(tmp_path / "after"))) == want
 
 
 def _round_trips(spark, fn) -> int:

@@ -89,27 +89,21 @@ def main() -> int:
             "oracle_rows": o_rows, "err": err,
         }
 
-    from big_data_processing_spark.operators.graph import (
-        release_leaked_checkpoints,
-    )
-    from big_data_processing_spark.plans.doc_clusters import pinned_rdd_ids
+    from big_data_processing_spark.partitioning import pin_scope
 
     for name, spec in SPECS.items():
         if only and name not in only:
             continue
         try:
-            sdf = spec.fn(spark, sf_dir).toPandas()
+            # each query frees its own pins; the memoized near-dup
+            # frames leave the scope and stay pinned for later queries
+            with pin_scope():
+                sdf = spec.fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             record(name, err=f"spark: {e}")
             print(f"FAIL {name}: spark error: {e}", flush=True)
             continue
-        finally:
-            # free leaked localCheckpoint blocks between queries
-            # (clearCache does not touch them); keep the memoized
-            # cluster frame
-            spark.catalog.clearCache()
-            release_leaked_checkpoints(spark, pinned_rdd_ids())
         if spec.oracle is None:
             record(name, s_rows=len(sdf), err="no_oracle")
             print(f"ok   {name}: rows-only ({len(sdf)} rows)", flush=True)
