@@ -21,8 +21,7 @@ hash they pass in.
   (``ngram_jaccard_pairs``, ``jaccard_prefix_filter_pairs``,
   ``similarity_join``). Each caller picks its own pin.
 - ``_gram_df`` — the per-block gram document-frequency aggregate.
-  Feeds the candidate generators, ``choose_similarity_plan`` and
-  ``_gram_bitmaps``.
+  Feeds the candidate generators and ``choose_similarity_plan``.
 - ``_signatures(basis)`` — per-row MinHash signatures as one
   ``sig`` array expression. The fast path passes ``_affine_sig``
   (xxhash64 basis), the md5 twin ``_md5_sig``
@@ -36,13 +35,11 @@ hash they pass in.
   n-gram candidate generators. ``_rare_gram_rows`` and
   ``_shared_gram_pairs`` (the inverted-index self-join) also serve
   the uncapped ``ngram_jaccard_pairs`` and ``winnow_share_pairs``.
-- ``_gram_bitmaps`` — vocabulary statistic, then per-document gram
-  bitmaps, or ``None`` above ``_BITMAP_VOCAB_CAP``. Used by
-  ``minhash_near_duplicates``, the n-gram family and
-  ``plans.doc_clusters.md5_gram_bits``.
 - ``_verify_jaccard_candidates`` — the one exact-Jaccard verifier,
-  over bitmaps when given, over gram arrays otherwise. Used by both
-  MinHash operators and the n-gram family.
+  over the gram arrays: the unfiltered ``_candidate_jaccard`` step
+  (id_a, id_b, jaccard), then the threshold. Used by both MinHash
+  operators and the n-gram family; the fast-path audit
+  (``plans.extension_queries``) reads ``_candidate_jaccard``.
 - ``_simhash(n_bits)`` — bit votes → signed recombine:
   ``simhash64_table`` (64-bit xxhash64 tokens) and
   ``simhash_near_duplicates_md5`` (32-bit md5 tokens).
@@ -53,7 +50,7 @@ hash they pass in.
 The Column expressions of the MinHash path that depend only on plain
 values (signature, band buckets, the Jaccard filter, the verifier's
 intersection, the normalize and shingle projections, the exact-dedup
-fingerprint and the vocabulary estimate) come from
+fingerprint) come from
 ``session.column_cache`` builders, because rebuilding them costs
 about one py4j round trip per expression node on every call.
 
@@ -96,18 +93,6 @@ _MERSENNE = (1 << 31) - 1
 # sequence derived from the permutation index.
 _A = [2 * i + 1 for i in range(1, 129)]  # odd multipliers
 _B = [(i * i * 7919 + 13) % _MERSENNE for i in range(1, 129)]
-
-#: Block-vocabulary ceiling for the bitmap exact verifier: with
-#: ``vocab`` distinct grams in a block, each document's gram set is
-#: ``ceil(vocab/64)`` longs; 4096 → ≤64 words ANDed+popcounted per
-#: candidate pair, still well under the hash-set cost of
-#: ``array_intersect`` on typical (hundreds-long) gram arrays.
-_BITMAP_VOCAB_CAP = 4096
-#: A vocabulary estimate above this multiple of the cap picks the
-#: array verifier without the exact statistic: twice the cap is 20
-#: standard deviations of the HyperLogLog++ estimate away.
-_VOCAB_ESTIMATE_MARGIN = 2
-
 
 def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     """Exact duplicate removal (generalizes A7,
@@ -246,141 +231,49 @@ def _gram_df(base: DataFrame, block_cols) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _max_block_vocab(gram_df: DataFrame, block_cols) -> int:
-    """Largest per-block distinct-gram count — the statistic the
-    bitmap-verify dispatch keys on. One vocab-sized aggregate job;
-    with no ``block_cols`` it is the corpus vocabulary."""
-    row = (
-        gram_df.groupBy(*block_cols)
-        .agg(F.count(F.lit(1)).alias("__v"))
-        .agg(F.max("__v").alias("__mv"))
-        .collect()[0]
-    )
-    return int(row["__mv"] or 0)
-
-
-def _block_gram_dicts(gram_df: DataFrame, block_cols) -> DataFrame:
-    """Flat per-block dense gram dictionary for the bitmap verifier:
-    (*block_cols, g, __w word index, __b single-bit mask). Gram ids
-    are assigned by ``row_number`` over the block's grams in gram
-    order — deterministic, and irrelevant to the result (any
-    bijection gives the same intersection sizes). ``block_cols``
-    may be empty (unblocked operators like MinHash): the dictionary
-    is then global. Kept FLAT so the bitmap build attaches it with
-    a broadcast HASH join — a ``map``-typed dictionary probed per
-    element was measured at ~50 s CPU per build: Spark's
-    ``element_at`` on a map is a LINEAR key scan, not a hash
-    lookup."""
-    w = Window.partitionBy(*[F.col(c) for c in block_cols]).orderBy("g")
-    return (
-        gram_df.select(*block_cols, "g")
-        .withColumn("__gid", F.row_number().over(w) - F.lit(1))
-        .select(
-            *block_cols,
-            "g",
-            F.shiftright("__gid", 6).cast("int").alias("__w"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), __gid % 64)").alias(
-                "__b"
-            ),
-        )
-    )
-
-
-def _bitmap_doc_frame(
-    base: DataFrame,
-    block_cols,
-    id_col: str,
-    dicts: DataFrame,
-    n_words: int,
-) -> DataFrame:
-    """(id, __sz, __bits) — each document's distinct-gram set as an
-    ``n_words``-long bitmap under its block's dictionary, pinned.
-    One broadcast hash join (gram → word/bit) over the exploded gram
-    table, then two aggregates — (id, word) → OR of bit masks, then
-    id → word map — both collapsed by map-side partial aggregation
-    inside the scan partition (``base`` is id-partitioned), so no
-    new shuffle and every op is codegen'd JVM work. The two-level
-    shape keeps per-input-row work CONSTANT in ``n_words`` (a
-    single-level form with one ``bit_or(when(...))`` aggregate per
-    word paid n_words conditionals per gram instance). A
-    trailing-zero-padded global width is exact: AND of zero words
-    adds zero popcount."""
-    ent = _exploded(base, id_col, block_cols).join(
-        F.broadcast(dicts), on=[*block_cols, "g"]
-    )
-    zero = F.lit(0).cast("long")
-    perword = ent.groupBy(id_col, "__w").agg(
-        F.bit_or("__b").alias("__word"),
-        F.count(F.lit(1)).alias("__c"),
-    )
-    out = (
-        perword.groupBy(id_col)
-        .agg(
-            F.sum("__c").cast("int").alias("__sz"),
-            F.map_from_entries(
-                F.collect_list(F.struct("__w", "__word"))
-            ).alias("__wm"),
-        )
-        .select(
-            F.col(id_col),
-            "__sz",
-            # ≤ n_words entries per map: the linear element_at probe
-            # is bounded by n_words², fine at dictionary scale
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_words - 1)),
-                lambda w: F.coalesce(
-                    F.element_at(F.col("__wm"), w), zero
-                ),
-            ).alias("__bits"),
-        )
-    )
-    # referenced by BOTH sides of the verify join (two broadcast
-    # jobs launched concurrently): a purely lazy pin loses that race
-    # and both sides rebuild every bitmap
-    return partitioning.pin_now(out)
-
-
-def _gram_bitmaps(
-    base: DataFrame,
-    id_col: str,
-    gram_df: DataFrame | None = None,
-    block_cols=(),
-) -> DataFrame | None:
-    """Per-document gram bitmaps of ``base`` for the bitmap verifier,
-    or ``None`` when the largest block vocabulary is empty or exceeds
-    ``_BITMAP_VOCAB_CAP`` (a bitmap would then be ``vocab/8`` bytes
-    per document, wider than the gram array itself). ``gram_df`` is
-    the caller's pinned :func:`_gram_df`; without one, the global
-    gram table is built and pinned here (it is read twice: the
-    vocabulary statistic and the dictionary)."""
-    if gram_df is None:
-        gram_df = _gram_df(base, block_cols).transform(partitioning.pin)
-    vocab = _max_block_vocab(gram_df, block_cols)
-    if not 0 < vocab <= _BITMAP_VOCAB_CAP:
-        return None
-    return _bitmap_doc_frame(
-        base, block_cols, id_col, _block_gram_dicts(gram_df, block_cols),
-        (vocab + 63) // 64,
-    )
-
-
 def _jaccard_filter(pairs: DataFrame, threshold: float) -> DataFrame:
     """(id_a, id_b, jaccard ≥ threshold) from (id_a, id_b, inter,
     sz_a, sz_b) over distinct-gram sets: |A ∪ B| = |A| + |B| − |A ∩ B|
     exactly, so no union set is ever built. Rounded to 6 digits, the
     cross-engine parity grid."""
-    jaccard, keep = _jaccard(threshold)
-    return pairs.select("id_a", "id_b", jaccard).filter(keep)
+    return pairs.select("id_a", "id_b", _jaccard()).filter(_at_least(threshold))
 
 
 @column_cache
-def _jaccard(threshold: float) -> tuple[Column, Column]:
-    """The rounded ``jaccard`` column and its threshold predicate."""
+def _jaccard() -> Column:
+    """The rounded ``jaccard`` column of an (inter, sz_a, sz_b) row."""
     union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
     jac = F.when(
         union > 0, F.col("inter").cast("double") / union
     ).otherwise(F.lit(0.0))
-    return F.round(jac, 6).alias("jaccard"), F.col("jaccard") >= threshold
+    return F.round(jac, 6).alias("jaccard")
+
+
+@column_cache
+def _at_least(threshold: float) -> Column:
+    return F.col("jaccard") >= threshold
+
+
+def _candidate_jaccard(
+    base: DataFrame, cand: DataFrame, id_col: str
+) -> DataFrame:
+    """(id_a, id_b, jaccard) of every candidate pair (id_a, id_b),
+    unfiltered: ``|A∩B| / (|A|+|B|−|A∩B|)`` over the (id, grams)
+    distinct-gram arrays of ``base``, with ``array_intersect`` for
+    ``|A∩B|``. The step :func:`_verify_jaccard_candidates` filters;
+    audits that need every pair's value read it directly.
+
+    The candidate frame enters this CPU-dense join tiny in bytes
+    (~20 B/row), so it is spread across the cores with a keyless
+    :func:`partitioning.spread` first (see there for why keyless)."""
+    a, b = _verify_sides(id_col)
+    return (
+        partitioning.spread(cand)
+        .join(base.select(*a), on="id_a")
+        .join(base.select(*b), on="id_b")
+        .select("id_a", "id_b", _intersection(), "sz_a", "sz_b")
+        .select("id_a", "id_b", _jaccard())
+    )
 
 
 def _verify_jaccard_candidates(
@@ -389,75 +282,37 @@ def _verify_jaccard_candidates(
     id_col: str,
     threshold: float,
     pin_result: bool = True,
-    bits: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact Jaccard verification of a candidate pair set (id_a, id_b).
-    Only the candidate set pays per-pair work; every returned value
-    is exact.
+    """Exact Jaccard verification of a candidate pair set (id_a, id_b)
+    against the gram arrays of ``base``: the pairs of
+    :func:`_candidate_jaccard` with ``jaccard ≥ threshold``. Only the
+    candidate set pays per-pair work; every returned value is exact.
 
-    With ``bits`` (a :func:`_gram_bitmaps` frame over the same gram
-    sets) ``|A∩B|`` is the summed popcount of the pairwise AND — a
-    few dozen long ops per candidate instead of ``array_intersect``'s
-    per-pair hash-set build over the (id, grams) arrays of ``base``
-    (measured at sf0.1: the array verifier was the suite's largest
-    CPU sink, 118 s executor CPU for 585k candidates). Both compute
-    ``|A∩B| / (|A|+|B|−|A∩B|)`` over the same distinct-gram sets, so
-    the values are identical.
-
-    Two plan hazards this shape avoids:
-
-    - the candidate frame enters this CPU-dense join tiny in BYTES
-      (~20 B/row), so a keyed spread is planner-eliminated and the
-      surviving distinct exchange AQE-coalesces to a handful of
-      tasks. The keyless :func:`partitioning.spread_even` exchange
-      cannot be eliminated or coalesced.
-    - callers sort the verified pairs: range partitioning SAMPLES its
-      child, re-executing the whole join+intersect pipeline a second
-      time. The tail lazy ``partitioning.pin`` (``pin_result``) lets the
-      sampler scan cached pair rows instead. Pass ``False`` when the
-      caller re-materializes the pairs itself (the cluster builder
-      pins its symmetrized edge list) — a second pin is overhead."""
-    frame = base if bits is None else bits
-    sides = _verify_sides(id_col, bits is not None)
-    verified = (
-        partitioning.spread_even(cand)
-        .join(frame.select(*sides[0]), on="id_a")
-        .join(frame.select(*sides[1]), on="id_b")
-        .select("id_a", "id_b", _intersection(bits is not None), "sz_a", "sz_b")
-    )
-    out = _jaccard_filter(verified, threshold)
+    Callers sort the verified pairs: range partitioning SAMPLES its
+    child, re-executing the whole join+intersect pipeline a second
+    time. The tail lazy ``partitioning.pin`` (``pin_result``) lets the
+    sampler scan cached pair rows instead. Pass ``False`` when the
+    caller re-materializes the pairs itself (the cluster builder pins
+    its symmetrized edge list) — a second pin is overhead."""
+    out = _candidate_jaccard(base, cand, id_col).filter(_at_least(threshold))
     return partitioning.pin(out) if pin_result else out
 
 
 @column_cache
-def _verify_sides(id_col: str, bitmaps: bool) -> tuple[tuple[Column, ...], ...]:
-    """The (id, size, set) projections of the two verify-join sides,
-    from gram arrays or from a :func:`_gram_bitmaps` frame."""
-    size, grams = (
-        (F.col("__sz"), F.col("__bits")) if bitmaps
-        else (F.size("grams"), F.col("grams"))
-    )
+def _verify_sides(id_col: str) -> tuple[tuple[Column, ...], ...]:
+    """The (id, size, gram array) projections of the two verify-join
+    sides."""
     return tuple(
-        (F.col(id_col).alias(f"id_{s}"), size.alias(f"sz_{s}"),
-         grams.alias(f"__g{s}"))
+        (F.col(id_col).alias(f"id_{s}"), F.size("grams").alias(f"sz_{s}"),
+         F.col("grams").alias(f"__g{s}"))
         for s in "ab"
     )
 
 
 @column_cache
-def _intersection(bitmaps: bool) -> Column:
-    """``inter`` = |A ∩ B| of the two sides' sets: summed popcount of
-    the pairwise AND for bitmaps, ``array_intersect`` for arrays."""
-    a, b = F.col("__ga"), F.col("__gb")
-    if not bitmaps:
-        return F.size(F.array_intersect(a, b)).alias("inter")
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: F.bit_count(x.bitwiseAND(y)).cast("long")
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, c: acc + c,
-    ).alias("inter")
+def _intersection() -> Column:
+    """``inter`` = |A ∩ B| of the two sides' gram arrays."""
+    return F.size(F.array_intersect(F.col("__ga"), F.col("__gb"))).alias("inter")
 
 
 # ---------------------------------------------------------------------------
@@ -605,36 +460,25 @@ def minhash_near_duplicates(
     threshold: float = 0.6,
     pin_result: bool = True,
     grams: DataFrame | None = None,
-    bits: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs with exact-Jaccard
     verification. Returns (id_a, id_b, jaccard), id_a < id_b.
 
     Pipeline: shingle base (pinned now) → per-row signatures →
-    xxhash64 band buckets → bucket self-join → exact verify. The
-    shingle frame is materialized NOW (``pin_now``) because it feeds
-    the signatures, the vocabulary statistic and the verify joins,
-    whose broadcast jobs launch concurrently: a purely lazy pin
-    re-runs the normalize+shingle pipeline once per reference.
+    xxhash64 band buckets → bucket self-join → exact verify over the
+    gram arrays (:func:`_verify_jaccard_candidates`). The shingle
+    frame is materialized NOW (``pin_now``) because it feeds the
+    signatures and both verify joins, whose broadcast jobs launch
+    concurrently: a purely lazy pin re-runs the normalize+shingle
+    pipeline once per reference.
 
-    ``grams`` / ``bits`` accept pre-built, ideally session-memoized
-    frames on the STRING gram basis (:func:`md5_gram_sets` / the
-    gram-bitmap frame from ``plans.doc_clusters.md5_gram_bits``) —
-    the same contract as the md5 twin. The xxhash64 signature basis
-    is derived from them per row (``xxhash64`` over a distinct
-    string-gram set IS the distinct hash set this path shingles
-    itself; ``array_min`` is duplicate-insensitive, so a 64-bit
-    collision cannot change a signature), and candidates verify
-    against the bitmaps with jaccard values identical to the hashed
-    arrays — both count the same distinct-gram sets. With both
-    frames provided this path never rescans the corpus.
-
-    Without ``bits``, verification dispatches on the corpus
-    vocabulary (:func:`_gram_bitmaps`): bitmaps when it fits
-    ``_BITMAP_VOCAB_CAP``, the gram arrays otherwise — identical
-    values either way. The shingle pin's own job estimates the
-    vocabulary first; above ``_VOCAB_ESTIMATE_MARGIN`` times the cap
-    the arrays are picked without the exact statistic.
+    ``grams`` accepts a pre-built, ideally session-memoized frame on
+    the STRING gram basis (:func:`md5_gram_sets`) — the same contract
+    as the md5 twin. The xxhash64 basis is derived from it per row
+    (``xxhash64`` over a distinct string-gram set IS the distinct
+    hash set this path shingles itself; ``array_min`` is
+    duplicate-insensitive, so a 64-bit collision cannot change a
+    signature), so this path then never rescans the corpus.
 
     ``pin_result`` (default on) ends the pipeline with a lazy
     ``partitioning.pin`` of the verified pairs (see
@@ -658,16 +502,7 @@ def minhash_near_duplicates(
         )
     else:
         base = _shingle_base(df, text_col, id_col, shingle_n)
-    if bits is not None:
-        shingled = partitioning.pin_now(base)
-    else:
-        # the pin's own job estimates the vocabulary. Far above the
-        # cap the exact statistic could only pick arrays, so its gram
-        # table checkpoint and collect (3 jobs) are skipped; a wrong
-        # estimate costs time, never values
-        shingled, vocab = partitioning.pin_now(base, summary=_vocab_estimate)
-        if vocab[0] <= _VOCAB_ESTIMATE_MARGIN * _BITMAP_VOCAB_CAP:
-            bits = _gram_bitmaps(shingled, id_col)
+    shingled = partitioning.pin_now(base)
     # empty docs are dropped from the PINNED frame, where the filter
     # stays put: drop_empty's length predicate is pushed below the
     # spread into the caller's unpinned upstream plan, measured at
@@ -677,20 +512,8 @@ def minhash_near_duplicates(
     )
     cand = _lsh_candidates(sig, id_col, bands, num_perm // bands, F.xxhash64)
     return _verify_jaccard_candidates(
-        shingled, cand, id_col, threshold, pin_result=pin_result, bits=bits
+        shingled, cand, id_col, threshold, pin_result=pin_result
     )
-
-
-def _vocab_estimate(base: DataFrame) -> DataFrame:
-    """One row: the HyperLogLog++ estimate of ``base``'s distinct
-    grams (default 5% relative standard deviation)."""
-    grams, estimate = _vocab_columns()
-    return base.select(grams).agg(estimate)
-
-
-@column_cache
-def _vocab_columns() -> tuple[Column, Column]:
-    return F.explode("grams").alias("g"), F.approx_count_distinct("g")
 
 
 @column_cache
@@ -735,7 +558,6 @@ def minhash_near_duplicates_md5(
     threshold: float = 0.6,
     grams: DataFrame | None = None,
     sig: DataFrame | None = None,
-    bits: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs on a CROSS-ENGINE hash basis:
     permutation i of a gram is md5("i:" || gram), band buckets are
@@ -756,13 +578,8 @@ def minhash_near_duplicates_md5(
     :func:`md5_gram_sets` / :func:`md5_minhash_signatures`: without
     them the lazy gram pipeline re-executes once per reference (the
     band self-join reads sig twice, the verification joins read
-    grams twice more). ``bits`` accepts the session-memoized
-    gram-bitmap frame over the SAME grams
-    (``plans.doc_clusters.md5_gram_bits``): candidates then verify by
-    popcount instead of ``array_intersect`` over ~1000-string arrays,
-    with identical values. Deliberately NOT self-built here:
-    un-memoized, the vocabulary statistic and bitmap build re-run per
-    invocation and cost more than they save."""
+    grams twice more). Candidates verify against the string-gram
+    arrays of ``grams`` (:func:`_verify_jaccard_candidates`)."""
     if grams is None:
         grams = md5_gram_sets(df, text_col, id_col, shingle_n)
     if sig is None:
@@ -773,7 +590,7 @@ def minhash_near_duplicates_md5(
         ).alias("sig"))
     cand = _lsh_candidates(sig, id_col, bands, num_perm // bands, F.md5)
     return _verify_jaccard_candidates(
-        grams, cand, id_col, threshold, pin_result=False, bits=bits
+        grams, cand, id_col, threshold, pin_result=False
     )
 
 
@@ -1060,8 +877,8 @@ def ngram_jaccard_pairs(
     valve: candidate pairs are generated only from grams whose
     block-local document frequency is ≤ max_df (bounding candidate
     work at max_df × corpus grams — linear), then each candidate's
-    Jaccard is verified EXACTLY (:func:`_verify_jaccard_candidates`,
-    bitmaps on small-vocabulary blocks), so every returned value is
+    Jaccard is verified EXACTLY over the gram arrays
+    (:func:`_verify_jaccard_candidates`), so every returned value is
     exact and every returned pair is real. The approximation is
     one-sided recall: a pair sharing ONLY ubiquitous grams is missed
     — precisely the pairs whose shared evidence is least
@@ -1095,15 +912,14 @@ def ngram_jaccard_pairs(
         _shingle_base(df, text_col, id_col, n, block_cols)
     )
     if max_df is not None:
-        # one gram-df aggregate serves the candidate cap AND the
-        # verifier's bitmap dispatch
+        # pinned: both sides of the candidate self-join read the gram
+        # table (measured faster than re-aggregating it per side)
         gram_df = _gram_df(base, block_cols).transform(partitioning.pin)
         cand = _capped_candidates(
             base, block_cols, id_col, max_df, gram_df=gram_df
         )
         return _verify_jaccard_candidates(
-            base, cand, id_col, threshold, pin_result=pin_result,
-            bits=_gram_bitmaps(base, id_col, gram_df, block_cols),
+            base, cand, id_col, threshold, pin_result=pin_result
         )
     exploded = _exploded(base, id_col, block_cols)
     inter_counts = (
@@ -1167,13 +983,13 @@ def jaccard_prefix_filter_pairs(
     base = _shingle_base(
         df, text_col, id_col, n, block_cols
     ).transform(partitioning.pin)
+    # pinned for the same reason as ngram_jaccard_pairs' capped path
     gram_df = _gram_df(base, block_cols).transform(partitioning.pin)
     cand = _prefix_filter_candidates(
         base, block_cols, id_col, threshold, gram_df=gram_df
     )
     return _verify_jaccard_candidates(
-        base, cand, id_col, threshold, pin_result=pin_result,
-        bits=_gram_bitmaps(base, id_col, gram_df, block_cols),
+        base, cand, id_col, threshold, pin_result=pin_result
     )
 
 
@@ -1431,8 +1247,7 @@ def similarity_join(
             base, block_cols, id_col, max_df, gram_df=gram_df
         )
     return _verify_jaccard_candidates(
-        base, cand, id_col, threshold, pin_result=pin_result,
-        bits=_gram_bitmaps(base, id_col, gram_df, block_cols),
+        base, cand, id_col, threshold, pin_result=pin_result
     )
 
 

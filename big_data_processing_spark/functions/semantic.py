@@ -319,7 +319,7 @@ def semantic_dedup_pairs(
     dim = int(first["d"]) if first else 0
     m_bytes = n_m * (8 * (dim + 4))
     small = 0 < m_bytes <= 64 << 20
-    a_src = partitioning.spread_even(m) if small else m
+    a_src = partitioning.spread(m) if small else m
     a = a_src.select(
         F.col("cluster"),
         F.col(id_col).alias("id_a"),

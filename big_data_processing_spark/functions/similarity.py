@@ -29,11 +29,7 @@ from pyspark.sql import functions as F
 
 from big_data_processing_spark.operators.windows import topk_per_group
 from big_data_processing_spark import partitioning
-from big_data_processing_spark.partitioning import (
-    spread,
-    spread_arrow,
-    spread_even,
-)
+from big_data_processing_spark.partitioning import spread, spread_arrow
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -251,7 +247,7 @@ def cosine_near_dup_pairs(
     # tasks (measured: 96k-pair verify on 2 of 32 cores, 2 s each —
     # the CPU-dense exact-cosine fold per pair needs COMPUTE width,
     # not byte width; same lesson as the Jaccard verifier)
-    pairs = spread_even(cand).join(
+    pairs = spread(cand).join(
         vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a")),
         on="id_a",
     ).join(
@@ -621,7 +617,7 @@ def cosine_near_dup_pairs_lsh(
     # tasks (measured: 96k-pair verify on 2 of 32 cores, 2 s each —
     # the CPU-dense exact-cosine fold per pair needs COMPUTE width,
     # not byte width; same lesson as the Jaccard verifier)
-    pairs = spread_even(cand).join(
+    pairs = spread(cand).join(
         vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a")),
         on="id_a",
     ).join(
@@ -722,7 +718,7 @@ def cosine_near_dup_pairs_ivf(
     # tasks (measured: 96k-pair verify on 2 of 32 cores, 2 s each —
     # the CPU-dense exact-cosine fold per pair needs COMPUTE width,
     # not byte width; same lesson as the Jaccard verifier)
-    pairs = spread_even(cand).join(
+    pairs = spread(cand).join(
         vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a")),
         on="id_a",
     ).join(

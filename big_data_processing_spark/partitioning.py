@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 from contextvars import ContextVar
-from typing import Callable, Iterator
+from typing import Iterator
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
@@ -56,33 +56,23 @@ def pin(df: DataFrame) -> DataFrame:
     return out
 
 
-def pin_now(
-    df: DataFrame, summary: Callable[[DataFrame], DataFrame] | None = None
-):
+def pin_now(df: DataFrame) -> DataFrame:
     """Materialize ``df`` NOW as a local checkpoint and return the
     pinned frame — the safe spelling of ``localCheckpoint(eager=True)``.
     Same lifecycle as :func:`pin`.
 
-    Measured at sf0.1/local[32]: ``eager=True`` materializes through
-    ``Dataset.checkpoint``'s internal ``rdd.count()`` and ran FAR
-    slower than executing the identical plan as a normal query — the
-    md5 gram-bitmap build stage cost 8.0 s executor CPU eager vs
-    1.3 s lazy-then-``count()``. A lazy checkpoint followed by one
-    ``count()`` action materializes the same blocks exactly once —
-    same lineage truncation, same pinned-block semantics (the count
-    scans the blocks it just wrote) — while the materializing
-    execution keeps whole-stage codegen + AQE. Use this anywhere a
-    frame is referenced by concurrently-launched consumer jobs
-    (broadcast sides race a purely lazy pin and rebuild the frame per
-    side).
-
-    ``summary`` (pinned frame → one-row frame) replaces the ``count()``
-    as the materializing action, so a statistic of the pinned rows
-    costs no job of its own; ``(pinned frame, summary row)`` is then
-    returned."""
+    Measured at sf0.1/local[32] on a pinned per-document aggregate:
+    ``eager=True`` materializes through ``Dataset.checkpoint``'s
+    internal ``rdd.count()`` and cost 8.0 s executor CPU, against
+    1.3 s for executing the identical plan as a normal query. A lazy
+    checkpoint followed by one ``count()`` action materializes the
+    same blocks exactly once — same lineage truncation, same
+    pinned-block semantics (the count scans the blocks it just wrote)
+    — while the materializing execution keeps whole-stage codegen +
+    AQE. Use this anywhere a frame is referenced by
+    concurrently-launched consumer jobs (broadcast sides race a purely
+    lazy pin and rebuild the frame per side)."""
     out = pin(df)
-    if summary is not None:
-        return out, summary(out).first()
     out.count()
     return out
 
@@ -128,7 +118,7 @@ def pin_scope() -> Iterator[None]:
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
     """Repartition to the session's default parallelism, hashed on
-    ``cols``.
+    ``cols``, or round-robin with no ``cols``.
 
     Use immediately before CPU-dense per-row work. The exchange
     itself is tiny for the narrow projections these operators feed
@@ -137,38 +127,23 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     same row count and costs one narrow shuffle — measure before
     removing it, skew in upstream partitioning usually makes it a
     win there too.
-    """
+
+    Frames whose BYTES are small but whose per-row work is not
+    (candidate pairs entering exact set-similarity verification:
+    ~20 bytes/row shuffled, an ``array_intersect`` per row computed)
+    are spread with no ``cols``. A keyed exchange whose child is
+    already hash-partitioned on the same columns is ELIMINATED as
+    redundant at planning time, and the surviving upstream exchange
+    is then AQE-coalesced by BYTES — measured at sf0.1: a 582k-row
+    candidate set (~5 MB) coalesced to 4 post-shuffle partitions,
+    putting 2/3 of the query's CPU on 4 of 32 cores (verify stage
+    17 s wall instead of ~1 s). A keyless round-robin exchange has a
+    different output partitioning, so it can never be eliminated,
+    and its explicit numPartitions is exempt from AQE coalescing. It
+    also pre-sorts its rows (``spark.sql.execution.sortBeforeRepartition``)
+    so task retries reproduce the same assignment."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *cols)
-
-
-def spread_even(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session's default parallelism —
-    the CPU-dense twin of :func:`spread` for frames whose BYTES are
-    small but whose per-row work is not (candidate pairs entering
-    exact set-similarity verification: ~20 bytes/row shuffled, an
-    array-intersect per row computed).
-
-    Why not ``spread`` (hash on columns): a keyed
-    ``repartition(n, cols)`` whose child is already hash-partitioned
-    on the same columns is ELIMINATED as redundant at planning time,
-    and the surviving upstream exchange is then AQE-coalesced by
-    BYTES — measured at sf0.1: a 582k-row candidate set (~5 MB)
-    coalesced to 4 post-shuffle partitions, putting 2/3 of the
-    query's CPU on 4 of 32 cores (verify stage 17 s wall instead of
-    ~1 s). A keyless round-robin exchange has a different output
-    partitioning, so it can never be eliminated, and its explicit
-    numPartitions is exempt from AQE coalescing. Rows are spread
-    evenly regardless of key skew.
-
-    Cost: one narrow shuffle (the rows are id pairs), plus the
-    deterministic pre-sort Spark applies to keyless repartitions
-    (``spark.sql.execution.sortBeforeRepartition``) so task retries
-    reproduce the same assignment. At cluster scale a downstream
-    sort-merge join would re-shuffle by key anyway — this exchange
-    stays cheap relative to the per-row verification it widens."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n)
 
 
 def spread_arrow(df: DataFrame, *cols: str, target_bytes: int = 8 << 20

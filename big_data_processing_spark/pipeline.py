@@ -170,11 +170,15 @@ def _submit(pool: ThreadPoolExecutor, spark: SparkSession, action: Callable) -> 
 def _label_jobs(spark: SparkSession, label: str) -> None:
     """Name this thread's next jobs ``label``: their description and
     call site. PySpark sets a job's call site only while no other
-    thread is inside an action (one process-wide depth counter), so a
-    pool action would otherwise carry the call site of the action
-    another thread started first."""
+    thread is inside an action (one process-wide depth counter), so an
+    action would otherwise carry the call site of the action another
+    thread started first."""
     spark.sparkContext.setJobDescription(label)
     spark.sparkContext._jsc.setCallSite(label)
+
+
+# The local properties ``_label_jobs`` sets on the caller's thread.
+_LABEL_PROPERTIES = ("spark.job.description", "callSite.short")
 
 
 def run_pipeline(
@@ -190,9 +194,30 @@ def run_pipeline(
 
     Pass a ``monitoring.PipelineMonitor`` to record per-stage
     wall/cpu/rss/task metrics (reference `pipeline_monitor.py:1-18`
-    role); omit for zero overhead."""
+    role); omit for zero overhead.
+
+    Every job is named after its stage (``_label_jobs``); the
+    caller's job description and call site are restored on return
+    and on raise."""
     if monitor is None:
         monitor = PipelineMonitor()  # record locally, discard
+    sc = spark.sparkContext
+    caller_labels = {k: sc.getLocalProperty(k) for k in _LABEL_PROPERTIES}
+    try:
+        return _run_pipeline(spark, sf_dir, out_dir, table, monitor)
+    finally:
+        for key, value in caller_labels.items():
+            sc.setLocalProperty(key, value)
+
+
+def _run_pipeline(
+    spark: SparkSession,
+    sf_dir: str,
+    out_dir: str,
+    table: str,
+    monitor: PipelineMonitor,
+) -> PipelineResult:
+    _label_jobs(spark, "scan")
     raw = load_table(spark, sf_dir, table)
 
     with monitor.stage("schema_gate"):
@@ -226,6 +251,7 @@ def run_pipeline(
     try:
         with ThreadPoolExecutor(max_workers=1 + len(SINKS)) as pool:
             quality_done = _submit(pool, spark, measure_quality)
+            _label_jobs(spark, "iqr_fences")
             enhanced = enrich(
                 iqr_filter(clean(raw), "l_extendedprice", exact=False)
             )
@@ -233,6 +259,7 @@ def run_pipeline(
             sinks_done = [_submit(pool, spark, processed)]
 
             stats = _grouped_stats(enhanced).cache()
+            _label_jobs(spark, "aggregates")
             with monitor.stage("aggregates") as arec:
                 vendor_gid = _grouping_id("l_returnflag")
                 clean_rows = sum(

@@ -66,9 +66,8 @@ Scale notes
   pass; for transitive near-dup clusters switch to a graph step
   (GraphFrames or iterative joins).
 - The near-dup pairs are read once, by a ``distinct``, so they are
-  not pinned (``pin_result=False``). The pins the near-dup operator
-  makes (the shingle frame, and on small vocabularies the gram table
-  and the gram bitmaps) are freed when the call returns or raises:
+  not pinned (``pin_result=False``). The pin the near-dup operator
+  makes (the shingle frame) is freed when the call returns or raises:
   the whole call is one ``partitioning.pin_scope``, so a closed loop
   of calls holds no more storage after each call than before it.
 - The per-language sample keeps class balance under a size budget

@@ -11,11 +11,12 @@ and memoized as a pinned local checkpoint (``partitioning.pin_now``)
 — the engine-level analogue of a materialized view over a
 deterministic pipeline.
 
-The memo frames are the pins that outlive the op that built them:
-each is taken out of the caller's ``partitioning.pin_scope`` with
-``partitioning.keep``, while the scratch pins of the build (the
-edge list and last label round of the connected components, the
-md5 gram table) are freed when that scope closes. Why a local
+The memo frames — the cluster frame here, and the md5 audit's gram
+and signature frames (:func:`md5_minhash_frames`) — are the pins
+that outlive the op that built them: each is taken out of the
+caller's ``partitioning.pin_scope`` with ``partitioning.keep``, while
+the scratch pins of the build (the edge list and last label round of
+the connected components) are freed when that scope closes. Why a local
 checkpoint and not ``persist()``: ``spark.catalog.clearCache()``
 does not touch checkpoint block storage, and the frame is tiny —
 (id, cluster_id, bool) per document, never document payloads — so
@@ -37,7 +38,6 @@ from pyspark.sql import functions as F
 
 from big_data_processing_spark import partitioning
 from big_data_processing_spark.functions.dedup import (
-    _gram_bitmaps,
     md5_gram_sets,
     md5_minhash_signatures,
     ngram_jaccard_pairs,
@@ -155,17 +155,6 @@ MH_NUM_PERM = 8
 MH_SHINGLE_N = 5
 
 
-def _md5_key(spark: SparkSession, sf_dir: str) -> tuple:
-    """Memo-key prefix of the md5 audit frames."""
-    return (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        "md5mh",
-        MH_NUM_PERM,
-        MH_SHINGLE_N,
-    )
-
-
 def md5_minhash_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -181,7 +170,13 @@ def md5_minhash_frames(
     touching the result (both frames are deterministic). Frame sizes are
     bounded: grams is the distinct-shingle set per doc (~5 bytes per
     corpus char), sig is num_perm md5 hex strings per doc."""
-    base = _md5_key(spark, sf_dir)
+    base = (
+        spark.sparkContext.applicationId,
+        os.path.abspath(sf_dir),
+        "md5mh",
+        MH_NUM_PERM,
+        MH_SHINGLE_N,
+    )
     gkey, skey = (*base, "grams"), (*base, "sig")
     if gkey in _CACHE and skey in _CACHE:
         return _CACHE[gkey], _CACHE[skey]
@@ -198,26 +193,3 @@ def md5_minhash_frames(
     _CACHE[gkey] = grams
     _CACHE[skey] = sig
     return grams, sig
-
-
-def md5_gram_bits(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """Memoized gram-BITMAP frame over the md5 string-gram basis
-    (``dedup._gram_bitmaps`` over the memoized
-    :func:`md5_minhash_frames` grams) — shared by every audit that
-    exact-verifies pairs against the string gram sets (the twin's
-    verification join and the fast-path audit's precision re-check
-    each paid an
-    ``array_intersect`` over ~1000-string arrays per pair; popcount
-    over the bitmap is ~30× less work with identical jaccard
-    values). Returns ``None`` when the corpus vocabulary exceeds the
-    bitmap cap — callers then keep the array path; that decision is
-    memoized too (it costs a scalar job)."""
-    bkey = (*_md5_key(spark, sf_dir), "bits")
-    if bkey in _CACHE:
-        return _CACHE[bkey]
-    grams, _sig = md5_minhash_frames(spark, sf_dir)
-    bits = _gram_bitmaps(grams, "doc_id")
-    if bits is not None:
-        partitioning.keep(bits)
-    _CACHE[bkey] = bits
-    return bits

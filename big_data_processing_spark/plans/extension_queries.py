@@ -473,24 +473,17 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact-Jaccard verification ≥0.5; deterministic xxhash64 basis",
 )
 def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_processing_spark.plans.doc_clusters import (
-        md5_gram_bits,
-        md5_minhash_frames,
-    )
+    from big_data_processing_spark.plans.doc_clusters import md5_minhash_frames
 
     docs = load_table(spark, sf_dir, "documents")
-    # session-memoized string-gram frames (same distinct 5-gram sets
+    # session-memoized string-gram frame (same distinct 5-gram sets
     # this path shingled itself — xxhash64 per row recovers the fast
-    # basis; priced in the bench's md5_minhash_build entry): the
-    # query then computes signatures, band joins and the popcount
-    # verify without rescanning the corpus. The r11 driver measured
-    # the self-shingling array-verify form at 9.0 s / 32 cores with
-    # an 8c/32c ratio of 0.47 — pure verify-stage allocation churn.
+    # basis): the query then computes signatures, band joins and the
+    # verify without rescanning the corpus
     grams, _sig = md5_minhash_frames(spark, sf_dir)
-    bits = md5_gram_bits(spark, sf_dir)
     return minhash_near_duplicates(
         docs, "text", "doc_id", num_perm=32, bands=8, threshold=0.5,
-        grams=grams, bits=bits,
+        grams=grams,
     ).orderBy("id_a", "id_b")
 
 
@@ -3300,7 +3293,6 @@ def q_minhash_near_dup_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_processing_spark.plans.doc_clusters import (
         MH_NUM_PERM,
         MH_SHINGLE_N,
-        md5_gram_bits,
         md5_minhash_frames,
     )
 
@@ -3309,7 +3301,6 @@ def q_minhash_near_dup_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_near_duplicates_md5(
         docs, "text", "doc_id", num_perm=MH_NUM_PERM, bands=2,
         shingle_n=MH_SHINGLE_N, threshold=0.6, grams=grams, sig=sig,
-        bits=md5_gram_bits(spark, sf_dir),
     ).orderBy("id_a", "id_b")
 
 
@@ -3934,31 +3925,29 @@ SIMHASH_PRECISION_FLOOR = 0.95
 )
 def q_minhash_fastpath_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_processing_spark.functions.dedup import (
+        _candidate_jaccard,
         minhash_near_duplicates_md5,
     )
     from big_data_processing_spark.plans.doc_clusters import (
         MH_NUM_PERM,
         MH_SHINGLE_N,
-        md5_gram_bits,
         md5_minhash_frames,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     grams, sig = md5_minhash_frames(spark, sf_dir)
-    bits = md5_gram_bits(spark, sf_dir)
     # both pair sets are referenced by several aggregates below —
     # pinned so the LSH pipelines run once each (the fast path now
     # pins its own verified result; a second checkpoint here would
     # materialize the same rows twice)
     fast = minhash_near_duplicates(
         docs, "text", "doc_id", num_perm=32, bands=8, threshold=0.6,
-        grams=grams, bits=bits,
+        grams=grams,
     )
     twin = (
         minhash_near_duplicates_md5(
             docs, "text", "doc_id", num_perm=MH_NUM_PERM, bands=2,
             shingle_n=MH_SHINGLE_N, threshold=0.6, grams=grams, sig=sig,
-            bits=bits,
         )
         .select("id_a", "id_b")
     )
@@ -3977,53 +3966,14 @@ def q_minhash_fastpath_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.concat_ws("\x01", F.array_sort("grams"))).alias("k"),
     ))
 
-    # ONE fused pass over the fast pair set (r12, guide §2.4 /
-    # VERDICT r11 #7: the four audit aggregates previously re-read
-    # the pair set once each): every per-pair statistic — exact
-    # STRING-basis jaccard for the precision floor (bitmap popcount
-    # when the vocabulary fits, array_intersect fallback),
+    # ONE fused pass over the fast pair set: every per-pair statistic
+    # — the exact STRING-basis jaccard for the precision floor
+    # (dedup's unfiltered verifier step over the string-gram arrays),
     # identical-gram membership (gk key equality), and twin
     # membership (left-join marker) — is attached in one join chain
     # and collapsed by a single aggregate.
-    if bits is not None:
-        ba = bits.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("__sz").alias("__sa"),
-            F.col("__bits").alias("__wa"),
-        )
-        bb = bits.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("__sz").alias("__sb"),
-            F.col("__bits").alias("__wb"),
-        )
-        zero = F.lit(0).cast("long")
-        inter = F.aggregate(
-            F.zip_with(
-                "__wa", "__wb",
-                lambda x, y: F.bit_count(x.bitwiseAND(y)).cast("long"),
-            ),
-            zero,
-            lambda a, b: a + b,
-        )
-        sj = inter.cast("double") / (
-            F.col("__sa") + F.col("__sb") - inter
-        )
-    else:
-        ba = grams.select(
-            F.col("doc_id").alias("id_a"), F.col("grams").alias("__ga")
-        )
-        bb = grams.select(
-            F.col("doc_id").alias("id_b"), F.col("grams").alias("__gb")
-        )
-        inter = F.size(F.array_intersect("__ga", "__gb"))
-        sj = inter.cast("double") / (
-            F.size("__ga") + F.size("__gb") - inter
-        )
-
     fused = (
-        fast.select("id_a", "id_b")
-        .join(ba, "id_a")
-        .join(bb, "id_b")
+        _candidate_jaccard(grams, fast.select("id_a", "id_b"), "doc_id")
         .join(
             gk.select(F.col("doc_id").alias("id_a"), F.col("k").alias("__ka")),
             "id_a",
@@ -4037,7 +3987,7 @@ def q_minhash_fastpath_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_fast"),
-            F.min(F.round(sj, 6)).alias("min_sj"),
+            F.min("jaccard").alias("min_sj"),
             F.sum(
                 F.when(F.col("__ka") == F.col("__kb"), 1).otherwise(0)
             ).cast("long").alias("n_ident_found"),

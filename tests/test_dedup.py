@@ -176,50 +176,6 @@ def test_ngram_jaccard_max_df_subset_and_exact_values(spark):
     assert full == exact
 
 
-def test_bitmap_verify_identical_to_array_verify(spark, monkeypatch):
-    """The bitmap exact verifier must return the SAME pair set and
-    values as the array verifier — same candidates, same distinct-
-    gram-hash sets, only the set representation differs. Pinned for
-    both operators that dispatch on the vocabulary (the blocked
-    n-gram join and MinHash, whose vocabulary is corpus-wide), on
-    both sides of ``_BITMAP_VOCAB_CAP``: a cap equal to the measured
-    largest block vocabulary picks bitmaps (bit_count in the plan),
-    one below it forces the array path, with identical output."""
-    import big_data_processing_spark.functions.dedup as dd
-    from big_data_processing_spark.sources.catalog import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "lang", "text"
-    )
-
-    def ngram():
-        return dd.ngram_jaccard_pairs(
-            docs, "text", "doc_id", ["lang"], n=3, threshold=0.3,
-            max_df=50, pin_result=False,
-        )
-
-    def minhash():
-        return dd.minhash_near_duplicates(
-            docs, "text", "doc_id", threshold=0.3, pin_result=False
-        )
-
-    default_cap = dd._BITMAP_VOCAB_CAP
-    for run, n, block_cols in ((ngram, 3, ["lang"]), (minhash, 5, [])):
-        base = dd._shingle_base(docs, "text", "doc_id", n, block_cols)
-        vocab = dd._max_block_vocab(dd._gram_df(base, block_cols), block_cols)
-        # the default cap takes the bitmap path on this corpus
-        assert 0 < vocab <= default_cap, (run.__name__, vocab)
-        out = {}
-        for cap, bitmap in ((vocab, True), (vocab - 1, False)):
-            monkeypatch.setattr(dd, "_BITMAP_VOCAB_CAP", cap)
-            df = run()
-            plan = df._jdf.queryExecution().optimizedPlan().toString()
-            assert ("bit_count" in plan) == bitmap, (run.__name__, cap)
-            out[bitmap] = {(r.id_a, r.id_b): r.jaccard for r in df.collect()}
-        assert out[True] == out[False], run.__name__
-        assert len(out[True]) > 0, run.__name__
-
-
 def test_prefix_filter_identical_to_exact_inverted_index(spark):
     """Prefix filtering is a full-recall candidate generator: output
     must be SET-IDENTICAL (pairs and values) to the exact

@@ -182,31 +182,34 @@ def test_pipeline_jobs_stay_in_caller_group_and_failure_cleans_up(spark, tmp_pat
 
 
 def test_pool_jobs_carry_their_action_label(spark, tmp_path):
-    """Each action run from the pipeline's pool names its jobs after
-    its monitor stage, call site and description. PySpark sets a call
-    site only when no other thread is inside an action, so without the
-    label quality-pass and sink jobs carried the caller's description
-    and the call site of the concurrent IQR fence job."""
+    """Every job of the call is named after its stage: its description
+    and call site. PySpark sets a call site only when no other thread
+    is inside an action, so without the labels the pool's quality-pass
+    and sink jobs, and the caller's stats collect, carried the call
+    site of the concurrent IQR fence job, and every job the caller's
+    description. The caller's description is back after the call."""
     sc = spark.sparkContext
-    labels = {"quality_metrics", *(f"sink:{name}" for name in pipeline.SINKS)}
+    # each label, and the file of PySpark's own call site of its action
+    own_site = {"scan": "NativeMethodAccessorImpl", "quality_metrics": "pipeline.py",
+                "iqr_fences": "cleaning.py", "aggregates": "pipeline.py"}
+    own_site.update({f"sink:{name}": "pipeline.py" for name in pipeline.SINKS})
     run_pipeline(spark, SF0001, str(tmp_path / "warm"))
     last_job = max((j for j, _ in jobs_since(sc, -1)), default=-1)
     sc.setJobGroup("etl-labels", "caller")
     try:
         run_pipeline(spark, SF0001, str(tmp_path / "out"))
+        assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc._jsc.sc().clearJobGroup()
     store = sc._jsc.sc().statusStore()
-    described = {}
+    described = []
     for job_id, _group in jobs_since(sc, last_job):
         job = store.job(job_id)
         desc = job.description()
-        described[job_id] = (job.name(), desc.get() if desc.isDefined() else None)
-    assert labels <= {desc for _name, desc in described.values()}
-    for name, desc in described.values():
-        if desc in labels:
-            # the label, or PySpark's own call site of this action
-            assert name == desc or "pipeline.py" in name, (name, desc)
+        described.append((job.name(), desc.get() if desc.isDefined() else None))
+    assert {desc for _name, desc in described} == set(own_site), described
+    for name, desc in described:
+        assert name == desc or own_site[desc] in name, (name, desc)
 
 
 def test_processed_sink_does_not_wait_for_the_quality_pass(spark, tmp_path, monkeypatch):

@@ -146,14 +146,15 @@ def test_degenerate_inputs(spark, tmp_path, kwargs, empty_from):
 
 def test_document_pipeline_job_count(spark, tmp_path):
     """The call submits the jobs of two passes over the data (the
-    MinHash shingle pin and the write) plus the near-dup operator's
-    vocabulary collect and bitmap pin: 27 on SF0001 with 4 shuffle
+    MinHash shingle pin and the write): 18 on SF0001 with 4 shuffle
     partitions, at any core count. A per-stage count() or a read-back
-    of the corpus adds jobs (47 with both)."""
+    of the corpus adds jobs (47 with both), and so does a vocabulary
+    statistic in the near-dup operator (27 with its gram table and
+    collect)."""
     sc = spark.sparkContext
     last_job = max((j for j, _ in jobs_since(sc, -1)), default=-1)
     run_document_pipeline(spark, SF0001, str(tmp_path))
-    assert len(jobs_since(sc, last_job)) <= 27
+    assert len(jobs_since(sc, last_job)) <= 18
 
 
 def _storage(spark) -> tuple[set[int], int]:
@@ -169,9 +170,9 @@ def _counts(res) -> dict:
 
 def test_document_pipeline_frees_its_pins(spark, tmp_path):
     """No pin outlives its call: after each call the persistent RDDs
-    and stored bytes are what they were before it. SF0001 takes the
-    bitmap path, whose shingle pin, gram table and bitmap pin each
-    outlived the call before the call became one pin scope."""
+    and stored bytes are what they were before it. The near-dup
+    operator's shingle pin outlived the call before the call became
+    one pin scope."""
     results = []
     for i in range(3):
         before = _storage(spark)

@@ -8,10 +8,13 @@ repr, so any query that passes here is robust to the driver's hash.
 
 Usage: python tools/oracle_check.py [--json OUT.json] [sf_dir] [query ...]
 
+Each ``ok``/``FAIL`` line ends with the query's Spark wall seconds
+(building the frame and collecting it, oracle excluded).
+
 ``--json`` writes a driver-shaped report (one row per query with
-rows_match / schema_match / hash_match) covering EVERY registered
-query — the full-surface complement to an external checker that
-samples a subset.
+rows_match / schema_match / hash_match and spark_s) covering EVERY
+registered query — the full-surface complement to an external
+checker that samples a subset.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -86,7 +90,7 @@ def main() -> int:
         report[name] = {
             "rows_match": rows, "schema_match": schema,
             "hash_match": values, "spark_rows": s_rows,
-            "oracle_rows": o_rows, "err": err,
+            "oracle_rows": o_rows, "err": err, "spark_s": spark_s,
         }
 
     from big_data_processing_spark.partitioning import pin_scope
@@ -94,38 +98,43 @@ def main() -> int:
     for name, spec in SPECS.items():
         if only and name not in only:
             continue
+        start = time.perf_counter()
         try:
             # each query frees its own pins; the memoized near-dup
             # frames leave the scope and stay pinned for later queries
             with pin_scope():
                 sdf = spec.fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
+            spark_s = round(time.perf_counter() - start, 3)
             failures.append(name)
             record(name, err=f"spark: {e}")
-            print(f"FAIL {name}: spark error: {e}", flush=True)
+            print(f"FAIL {name}: spark error: {e} [{spark_s:.2f} s]", flush=True)
             continue
+        spark_s = round(time.perf_counter() - start, 3)
+        took = f"[{spark_s:.2f} s]"
         if spec.oracle is None:
             record(name, s_rows=len(sdf), err="no_oracle")
-            print(f"ok   {name}: rows-only ({len(sdf)} rows)", flush=True)
+            print(f"ok   {name}: rows-only ({len(sdf)} rows) {took}", flush=True)
             continue
         try:
             odf = con.execute(spec.oracle).fetchdf()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             record(name, s_rows=len(sdf), err=f"oracle: {e}")
-            print(f"FAIL {name}: oracle error: {e}", flush=True)
+            print(f"FAIL {name}: oracle error: {e} {took}", flush=True)
             continue
         s, o = normalize(sdf), normalize(odf)
         if len(s) != len(o):
             failures.append(name)
             record(name, rows=False, s_rows=len(s), o_rows=len(o))
-            print(f"FAIL {name}: rows {len(s)} vs {len(o)}", flush=True)
+            print(f"FAIL {name}: rows {len(s)} vs {len(o)} {took}", flush=True)
             continue
         if list(s.columns) != list(o.columns):
             failures.append(name)
             record(name, rows=True, schema=False, s_rows=len(s),
                    o_rows=len(o))
-            print(f"FAIL {name}: cols {list(s.columns)} vs {list(o.columns)}", flush=True)
+            print(f"FAIL {name}: cols {list(s.columns)} vs {list(o.columns)} {took}",
+                  flush=True)
             continue
         sv, ov = value_repr(s), value_repr(o)
         if sv != ov:
@@ -133,7 +142,8 @@ def main() -> int:
             ndiff = sum(1 for a, b in zip(sv, ov) if a != b)
             record(name, rows=True, schema=True, values=False,
                    s_rows=len(s), o_rows=len(o))
-            print(f"FAIL {name}: values differ ({ndiff}/{len(sv)} rows)", flush=True)
+            print(f"FAIL {name}: values differ ({ndiff}/{len(sv)} rows) {took}",
+                  flush=True)
             for a, b in zip(sv, ov):
                 if a != b:
                     print(f"  spark : {a}")
@@ -142,7 +152,7 @@ def main() -> int:
         else:
             record(name, rows=True, schema=True, values=True,
                    s_rows=len(s), o_rows=len(o))
-            print(f"ok   {name}: {len(s)} rows, {len(s.columns)} cols", flush=True)
+            print(f"ok   {name}: {len(s)} rows, {len(s.columns)} cols {took}", flush=True)
 
     if json_out:
         with open(json_out, "w") as fh:
